@@ -22,8 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rows). Any layout-dependent digit flips the canonical hash.
   *
   * Usage: `runMain graft.DeterminismCheck <sfDir> [name,name,...]`
-  * Exits non-zero on any mismatch. `DeterminismSpec` runs the same
-  * invariant over the full registry at sf0.001 in `sbt test`.
+  * Exits non-zero on any mismatch or error (reported apart).
+  * `DeterminismSpec` runs the same invariant over the full registry at
+  * sf0.001 in `sbt test`.
   */
 object DeterminismCheck {
 
@@ -86,11 +87,15 @@ object DeterminismCheck {
     s.conf.set("spark.sql.files.maxPartitionBytes", maxBytes)
   }
 
-  /** Runs `names` (all registered queries if empty) under both layouts;
-    * returns the mismatched names. */
+  /** Layout-dependent queries, and queries that threw. */
+  final case class Outcome(nondeterministic: Seq[String], errors: Seq[String]) {
+    def ok: Boolean = nondeterministic.isEmpty && errors.isEmpty
+  }
+
+  /** Runs `names` (all registered queries if empty) under both layouts. */
   def run(spark: SparkSession, sfDir: String,
           names: Set[String] = Set.empty,
-          quiet: Boolean = false): Seq[String] = {
+          quiet: Boolean = false): Outcome = {
     val todo = SparkEntry.queries
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
     // restore the CALLER's layout afterwards — the shared test session
@@ -98,7 +103,8 @@ object DeterminismCheck {
     val origParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val origBytes = spark.conf
       .getOption("spark.sql.files.maxPartitionBytes").getOrElse("128m")
-    val bad = scala.collection.mutable.ArrayBuffer[String]()
+    val nondeterministic = scala.collection.mutable.ArrayBuffer[String]()
+    val errors = scala.collection.mutable.ArrayBuffer[String]()
     todo.foreach { case (name, fn) =>
       try {
         withLayout(spark, 7, "1m")
@@ -106,19 +112,19 @@ object DeterminismCheck {
         withLayout(spark, 200, "128m")
         val b = canon(fn(spark, sfDir))
         if (a != b) {
-          bad += name
+          nondeterministic += name
           println(s"NONDETERMINISTIC $name: $a != $b")
         } else if (!quiet) println(s"ok   $name $a")
       } catch {
         case e: Throwable =>
-          bad += name
+          errors += name
           println(s"ERROR $name: ${e.getMessage}")
       } finally {
         spark.conf.set("spark.sql.shuffle.partitions", origParts)
         spark.conf.set("spark.sql.files.maxPartitionBytes", origBytes)
       }
     }
-    bad.toSeq
+    Outcome(nondeterministic.toSeq, errors.toSeq)
   }
 
   def main(args: Array[String]): Unit = {
@@ -126,9 +132,10 @@ object DeterminismCheck {
     val names = args.lift(1).map(_.split(",").toSet).getOrElse(Set.empty)
     Verify.pinRouteMtimes()
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    val bad = run(spark, sfDir, names)
-    println(s"determinism: ${if (bad.isEmpty) "ALL OK" else bad.mkString(", ")}")
+    val outcome = run(spark, sfDir, names)
+    println(s"determinism: ${if (outcome.ok) "ALL OK" else
+      s"nondeterministic ${outcome.nondeterministic.mkString(", ")}; errors ${outcome.errors.mkString(", ")}"}")
     spark.stop()
-    if (bad.nonEmpty) sys.exit(1)
+    if (!outcome.ok) sys.exit(1)
   }
 }

@@ -336,11 +336,13 @@ object Dedup {
    * the result.
    *
    * Shape: positional tokenize + positional n-gram explode (one pass
-   * each), the gram-keyed occurrence window (long-n-gram flatness
-   * carries the skew, as in [[duplicateSpans]]), an n-wide bounded
+   * each), a gram-keyed count aggregate (the hot-gram set, map-side
+   * combined) left-semi joined back to the grams, an n-wide bounded
    * coverage explode, one doc-keyed anti-join, and a doc-keyed
    * re-aggregation whose in-group sort is by token position. Nothing
-   * quadratic, nothing corpus-keyed.
+   * quadratic, nothing corpus-keyed. [[duplicateSpans]] keeps its
+   * occurrence window on purpose: this aggregate form measured 2–3×
+   * slower in that family (OPTIMIZATION_r16.md).
    */
   def removeDuplicateSpans(df: DataFrame, textCol: String, idCol: String,
                            n: Int = 8, minCount: Long = 2L): DataFrame = {
@@ -354,9 +356,6 @@ object Dedup {
     val grams = df.select(col(idCol).as("doc_id"),
       posexplode(graft.functions.GraftFunctions.graftWordNgrams(col(textCol), n))
         .as(Seq("gpos", "gram")))
-    // same aggregate+semi-join restatement as [[duplicateSpans]] (r16):
-    // the hot-gram set is counted map-side-combined and broadcast back,
-    // replacing the sort-everything gram window
     val dupGrams = grams.groupBy(col("gram"))
       .agg(count(lit(1)).as("occ"))
       .filter(col("occ") >= minCount)

@@ -4,6 +4,7 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /**
  * Similarity search over embedding columns (array<float>), SURVEY §7.1
@@ -480,7 +481,10 @@ object Similarity {
     // shuffles corpus rows, sorting nothing.
     // null sims (zero-norm input under cosine) sorted LAST by the window
     // (desc nulls-last); coalesce to +∞ so the aggregate agrees
+    // the typed argmin carries ids as longs: others would null or truncate
     val cidType = joined.schema("centroid_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(cidType),
+      s"centroid id column '$centroidId' must be integral, not ${cidType.simpleString}")
     joined.groupBy(col(idCol))
       .agg(first(col(vecCol)).as(vecCol),
         graft.functions.GraftFunctions.graftArgMinLong(

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.aggregate.FileAggregates
 import graft.ingest.{Metadata, Readers}
@@ -219,16 +220,16 @@ object ValidationPipeline {
    *  carry their own `Scan text` in the q_ode_error_histogram plan).
    *  Both branches evaluate inside ONE action, so a lazy persist is
    *  enough (block-level locking dedups the fill). Callers that drive
-   *  ONE consumer of `validated` (q_ode_sequential, streaming
-   *  foreachBatch — which persists its own input batch) keep plain
-   *  [[runJson]]; the caller's harness (BenchHarness / Verify) clears
-   *  the cache after the action. */
+   *  ONE consumer of `validated` (q_ode_sequential) keep plain
+   *  [[runJson]], as do callers of [[writeAll]], which persists itself; the
+   *  caller's harness (BenchHarness / Verify) clears the cache after the
+   *  action. */
   def runJsonShared(spark: SparkSession, path: String, suite: ValidationSuite,
                     schema: StructType = OdeSchema.record,
                     chunkSerials: Option[Long] = None): Result = {
     val records = Readers.ndjson(spark, path, schema)
     val validated = validateRecords(records, suite)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val chosen =
       if (suite.sequential) chunkSerials.orElse(autoChunkSerials(spark, path))
       else chunkSerials
@@ -270,34 +271,64 @@ object ValidationPipeline {
     Result(validated, sequential, totals, hist, suite.sequential)
   }
 
-  /** Parquet sinks (BASELINE.json: "Spark DataFrame ETL + Parquet write"):
-   *  K1 metadata docs, A2 totals + K3 verdicts, A3 histogram, sequential
-   *  verdicts. `bucketRoot`/`environment` feed the metadata doc (P4-P6). */
+  /** The one sink fan-out, for a batch run and each streaming micro-batch:
+   *  A2 totals + K3 verdicts, A3 histogram, sequential verdicts, K1
+   *  metadata docs when `bucketRoot` is set (P4-P6), then `extraSinks`.
+   *  Parquet is written with `mode` (batch overwrites, the stream appends;
+   *  appends are not yet idempotent on a replayed `batchId`). Contract:
+   *  persist `validated`, `sequential`, `fileTotals`; write `file_totals`
+   *  first and alone; run the other sinks concurrently; join them all;
+   *  unpersist; rethrow the first failure, the others suppressed. No
+   *  timeout: HTTP sinks bound their own I/O; the job group cancels jobs. */
   def writeAll(result: Result, outDir: String,
                bucketRoot: Option[String] = None,
-               environment: String = "dev"): Unit = {
-    // One materialization feeds every sink: Spark actions share no work,
-    // so without this each write re-reads the files and re-evaluates the
-    // whole rule projection (cache matching is by canonical logical plan,
-    // so the derived totals/histogram/sequential plans all hit it).
-    // MEMORY_AND_DISK: spills instead of recomputing at 100 TB scale.
-    val cached = result.validated
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+               environment: String = "dev",
+               mode: SaveMode = SaveMode.Overwrite,
+               extraSinks: Seq[Result => Unit] = Nil): Unit = {
+    // One materialization feeds every sink (else each re-runs the rule
+    // projection); `sequential` and `fileTotals` are re-read and per-file
+    // bounded. Unpersisted in reverse so no dependent cache is rebuilt.
+    val cached = (Seq(result.validated) ++
+      Option.when(result.hasSequential)(result.sequential) :+ result.fileTotals)
+      .map(_.persist(StorageLevel.MEMORY_AND_DISK))
+    def parquet(df: DataFrame, name: String): () => Unit =
+      () => df.write.mode(mode).parquet(s"$outDir/$name")
     try {
-      result.fileTotals.write.mode("overwrite").parquet(s"$outDir/file_totals")
-      result.errorHistogram.write.mode("overwrite").parquet(s"$outDir/error_histogram")
-      if (result.hasSequential)
-        result.sequential.write.mode("overwrite").parquet(s"$outDir/sequential")
-      bucketRoot.foreach { root =>
-        val meta = Metadata.fileMetadata(result.validated, root, environment)
+      // the totals write runs FIRST and alone: it folds the sequential
+      // verdicts in, so it fills all three caches in one job (concurrent
+      // first-consumers of an unmaterialized persist would each compute it)
+      parquet(result.fileTotals, "file_totals")()
+      val metadata = bucketRoot.map { root =>
+        Metadata.fileMetadata(result.validated, root, environment)
           .join(result.fileTotals.select(
             Metadata.keyColumn(col("file"), root).as("key"),
             col("num_valid"), col("num_error_messages")), Seq("key"), "left")
-        meta.write.mode("overwrite").parquet(s"$outDir/metadata")
       }
-    } finally {
-      cached.unpersist()
-      ()
+      runConcurrently(Seq(parquet(result.errorHistogram, "error_histogram")) ++
+        Option.when(result.hasSequential)(parquet(result.sequential, "sequential")) ++
+        metadata.map(parquet(_, "metadata")) ++ extraSinks.map(sink => () => sink(result)))
+    } finally cached.reverse.foreach(_.unpersist())
+  }
+
+  /** One new thread per sink — a new `Thread` inherits its creator's Spark
+   *  local properties (job group, a stream's run id), a pooled one need
+   *  not. Joins all, passing a caller interrupt (`query.stop()`) on to
+   *  the sinks; then throws the first failure, the others suppressed. */
+  private def runConcurrently(sinks: Seq[() => Unit]): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = sinks.map { sink =>
+      val t = new Thread(() => try sink() catch { case e: Throwable => failures.add(e); () })
+      t.start()
+      t
+    }
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case e: InterruptedException => failures.add(e); threads.foreach(_.interrupt()) }
+    }
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
     }
   }
 }

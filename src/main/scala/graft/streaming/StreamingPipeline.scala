@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -15,10 +15,14 @@ import graft.pipeline.{OdeSchema, ValidationPipeline}
  * The reference is event-driven: one Lambda invocation per S3 object
  * (lambda_function.py:8-15), at-least-once, no cross-file state. The
  * Spark-native equivalent is a file-source stream: `readStream` discovers
- * new files, `foreachBatch` runs the SAME batch pipeline over each
- * micro-batch (all transforms are per-file, so a file never spans
- * batches), and the checkpoint gives exactly-once file discovery — a
- * strict upgrade over Lambda retries double-indexing Elasticsearch.
+ * new files, `foreachBatch` runs the SAME batch pipeline and sink fan-out
+ * ([[ValidationPipeline.writeAll]]) over each micro-batch (all transforms
+ * are per-file, so a file never spans batches), and the checkpoint gives
+ * exactly-once file discovery — a strict upgrade over Lambda retries
+ * double-indexing Elasticsearch. The sink threads carry the stream's job
+ * group, which `query.stop()` cancels. Parquet appends are not yet
+ * idempotent on a replayed `batchId`: a re-run micro-batch appends its
+ * rows again.
  *
  * `Trigger.AvailableNow` processes the current backlog then stops —
  * byte-identical outputs to the batch path over the same files (asserted
@@ -31,7 +35,7 @@ object StreamingPipeline {
             outDir: String, checkpointDir: String,
             schema: StructType = OdeSchema.record,
             trigger: Trigger = Trigger.AvailableNow(),
-            extraSinks: Seq[graft.pipeline.ValidationPipeline.Result => Unit] = Nil): StreamingQuery = {
+            extraSinks: Seq[ValidationPipeline.Result => Unit] = Nil): StreamingQuery = {
     val lines = spark.readStream.text(globPath)
       .select(
         col("value"),
@@ -58,55 +62,9 @@ object StreamingPipeline {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one materialization feeds every sink — and it is the VALIDATED
-        // frame that is cached (r16; was the raw batch): the compiled
-        // rule projection is the heaviest per-row work in the pipeline,
-        // and persisting upstream of it re-ran validation (plus its
-        // codegen) once per sink — 3× for totals/histogram/sequential.
-        // Caching validated also fires the observe() aggregates exactly
-        // once, as before.
-        val validated = ValidationPipeline.validateRecords(batch, suite)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val result = ValidationPipeline.run(validated, suite)
-          // the per-file sequential verdicts are consumed up to three
-          // times (own sink + folded into totals AND histogram) — cache
-          // the per-file-bounded frame so the window chain runs once
-          if (result.hasSequential) result.sequential.persist()
-          // with external sinks attached, fileTotals is consumed twice
-          // (parquet + the hook) — share one evaluation
-          if (extraSinks.nonEmpty) result.fileTotals.persist()
-          try {
-            // the totals write runs FIRST and alone: it folds the
-            // sequential verdicts in, so it materializes both caches in
-            // one job (concurrent first-consumers of an unmaterialized
-            // persist would each compute it)
-            result.fileTotals.write.mode("append").parquet(s"$outDir/file_totals")
-            // the remaining sinks are independent reads of warm caches —
-            // overlap them (guide §2.6) so the batch pays max(), not sum()
-            // K1/K2 seam (r13 verdict item 8): external per-batch sinks —
-            // ES metadata docs, CloudWatch datums — attach HERE, inside the
-            // persist scope, exactly where the reference's Lambda posts
-            // them per object (bucket_event_lambda_handler.py:91-198)
-            import scala.concurrent.{Await, Future}
-            import scala.concurrent.duration.Duration
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.global
-            val sinks = Seq(
-              Future(result.errorHistogram.write.mode("append")
-                .parquet(s"$outDir/error_histogram"))) ++
-              (if (result.hasSequential)
-                Seq(Future(result.sequential.write.mode("append")
-                  .parquet(s"$outDir/sequential")))
-              else Nil) ++
-              extraSinks.map(sink => Future(sink(result)))
-            Await.result(Future.sequence(sinks), Duration.Inf)
-            ()
-          } finally {
-            if (result.hasSequential) result.sequential.unpersist()
-            if (extraSinks.nonEmpty) result.fileTotals.unpersist()
-          }
-        } finally { validated.unpersist(); () }
+        ValidationPipeline.writeAll(
+          ValidationPipeline.run(ValidationPipeline.validateRecords(batch, suite), suite),
+          outDir, mode = SaveMode.Append, extraSinks = extraSinks)
       }
       .start()
   }
@@ -116,7 +74,7 @@ object StreamingPipeline {
   def runAvailableNow(spark: SparkSession, globPath: String, suite: ValidationSuite,
                       outDir: String, checkpointDir: String,
                       schema: StructType = OdeSchema.record,
-                      extraSinks: Seq[graft.pipeline.ValidationPipeline.Result => Unit] = Nil): Unit = {
+                      extraSinks: Seq[ValidationPipeline.Result => Unit] = Nil): Unit = {
     val q = start(spark, globPath, suite, outDir, checkpointDir, schema,
       extraSinks = extraSinks)
     q.awaitTermination()

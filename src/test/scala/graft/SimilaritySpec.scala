@@ -133,6 +133,24 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.85, s"recall $recall")
   }
 
+  test("assignToCentroids rejects non-integral centroid ids instead of nulling them") {
+    val vecs = Seq((1L, Array(1.0, 0.0)), (2L, Array(0.0, 1.0))).toDF("vec_id", "embedding")
+    val cents = Seq(("a", Array(1.0, 0.0)), ("b", Array(0.0, 1.0)))
+      .toDF("centroid_id", "centroid")
+    def assign(c: org.apache.spark.sql.DataFrame) = Similarity.assignToCentroids(
+      vecs, "vec_id", "embedding", c, "centroid_id", "centroid")
+    for (bad <- Seq(cents, cents.withColumn("centroid_id", lit(1.5)))) {
+      val e = intercept[IllegalArgumentException](assign(bad))
+      assert(e.getMessage.contains("integral"), e.getMessage)
+    }
+    // integral ids keep their type and value
+    val byInt = assign(cents.withColumn("centroid_id",
+      when(col("centroid_id") === "a", 7).otherwise(3)))
+    assert(byInt.schema("centroid_id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(byInt.select("vec_id", "centroid_id").as[(Long, Int)].collect().toMap ==
+      Map(1L -> 7, 2L -> 3))
+  }
+
   test("semantic dedup: kept set is threshold-independent within cells; drops are justified") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val centroids = e.filter(col("vec_id") < 4)
