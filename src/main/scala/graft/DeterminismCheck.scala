@@ -105,12 +105,17 @@ object DeterminismCheck {
       .getOption("spark.sql.files.maxPartitionBytes").getOrElse("128m")
     val nondeterministic = scala.collection.mutable.ArrayBuffer[String]()
     val errors = scala.collection.mutable.ArrayBuffer[String]()
+    // a query may persist what it reads (q_ode_file_totals persists
+    // `validated`): clear after each run, or the second layout re-reads
+    // the rows the first layout cached instead of recomputing them
+    def once(fn: (SparkSession, String) => DataFrame): String =
+      try canon(fn(spark, sfDir)) finally spark.catalog.clearCache()
     todo.foreach { case (name, fn) =>
       try {
         withLayout(spark, 7, "1m")
-        val a = canon(fn(spark, sfDir))
+        val a = once(fn)
         withLayout(spark, 200, "128m")
-        val b = canon(fn(spark, sfDir))
+        val b = once(fn)
         if (a != b) {
           nondeterministic += name
           println(s"NONDETERMINISTIC $name: $a != $b")

@@ -173,8 +173,7 @@ object ScaleCheck {
     // would multiply the PLAN 256×, a planner stress test, not a data
     // one — measured: analysis alone ran minutes)
     time(s"config2_manyfiles(${mult * 16} replicas)", 60) {
-      val suite = graft.config.SuiteLoader.fromFile(
-        "/root/reference/odevalidator/config_2.ini")
+      val suite = graft.config.SuiteLoader.fromFile(Queries.config2IniPath)
       val records = graft.ingest.Readers.ndjson(spark,
         "fixtures/config2/data/*.json", graft.pipeline.OdeSchema.config2Record)
       val repl = records

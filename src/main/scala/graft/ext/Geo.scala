@@ -610,33 +610,31 @@ object Geo {
     val spark = points.sparkSession
     if (strictHotCells)
       requireNoHotCells(points, tsCol, latCol, lonCol, dtNs, cellDeg, maxCellFixes)
-    // ONE discovery pass (r16: was a span aggregate PLUS a distinct-slice
-    // scan — two full reads of the fix table before any slice ran): the
-    // distinct populated bucket set is bounded driver state (span/dtNs
-    // entries — ~4.4k/year at dtNs = 2 h) and yields span AND populated
-    // slice indices. Indices are anchored at minTb so the offsets are
-    // non-negative and integer division equals floor.
-    val tbSet = points.select(expr(s"$tsCol div $dtNs").as("__tb"))
-      .distinct().collect().map(_.getLong(0))
-    if (tbSet.isEmpty) // empty input: the one-shot plan handles it
+    // ONE discovery aggregate: the POPULATED slices (r14 ADVICE — one
+    // corrupt epoch-0 outlier must not grid-iterate thousands of empty
+    // slices) with each slice's min and max bucket, so driver state is
+    // bounded by the slice count, not the bucket count. Slices are
+    // anchored at bucket 0 (exact floor division: `div` truncates
+    // toward zero); any anchor partitions the encounters the same way.
+    val tb = expr(s"$tsCol div $dtNs")
+    val slices = points.select(tb.as("__tb"))
+      .groupBy(expr(s"(__tb - pmod(__tb, $sliceBuckets)) div $sliceBuckets").as("__si"))
+      .agg(min(col("__tb")).as("lo"), max(col("__tb")).as("hi"))
+      .orderBy(col("__si"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    if (slices.isEmpty) // empty input: the one-shot plan handles it
       return colocationPairs(points, keyCol, idCol, tsCol, latCol, lonCol,
         distM, dtNs, cellDeg, maxCellFixes)
-    val (minTb, maxTb) = (tbSet.min, tbSet.max)
-    // POPULATED slices only (r14 ADVICE): iterating the raw bucket
-    // RANGE means one corrupt outlier timestamp (epoch 0 against a
-    // modest dtNs) yields thousands of EMPTY slices, each a full Spark
-    // job + parquet write + GC pause.
-    val sliceIdxs = tbSet.map(tb => (tb - minTb) / sliceBuckets).distinct.sorted
-    val gridSlices = (maxTb - minTb) / sliceBuckets + 1
-    if (sliceIdxs.length < gridSlices)
+    val gridSlices = slices.last._1 - slices.head._1 + 1
+    if (slices.length < gridSlices)
       org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"colocationPairsSliced: ${gridSlices - sliceIdxs.length} empty " +
-          s"slices skipped (${sliceIdxs.length} populated of $gridSlices)")
-    def sliceAgg(si: Long): DataFrame = {
-      val lo = minTb + si * sliceBuckets
-      val hi = math.min(lo + sliceBuckets - 1, maxTb)
-      val part = points.filter(
-        expr(s"$tsCol div $dtNs").between(lo, hi + 1))
+        s"colocationPairsSliced: ${gridSlices - slices.length} empty " +
+          s"slices skipped (${slices.length} populated of $gridSlices)")
+    // slice [lo, hi] reads fixes in [lo, hi + 1]: an encounter's home
+    // bucket is one of its fixes' buckets, so it lies inside exactly one
+    // populated slice's [lo, hi], and its partner at most one bucket on
+    def sliceAgg(lo: Long, hi: Long): DataFrame = {
+      val part = points.filter(tb.between(lo, hi + 1))
       coloEncounters(part, keyCol, idCol, tsCol, latCol, lonCol,
           distM, dtNs, cellDeg, maxCellFixes)
         .filter(col("pair_tb").between(lo, hi))
@@ -644,7 +642,7 @@ object Geo {
         .agg(count(lit(1)).as("n"), min(col("dist_m")).as("closest"))
     }
     val merged =
-      if (sliceIdxs.length <= 4) {
+      if (slices.length <= 4) {
         // r16: few populated slices (the common case — 32768 buckets of
         // 2 h is ~7.5 years per slice) don't need the scratch spill at
         // all: union the per-slice partial aggregates into ONE action.
@@ -652,12 +650,12 @@ object Geo {
         // round-trip + the per-slice System.gc() (a full-heap pause per
         // slice) disappear. Results identical: counts partition across
         // slices, min-of-mins.
-        sliceIdxs.map(sliceAgg).reduce(_.unionByName(_))
+        slices.map { case (_, lo, hi) => sliceAgg(lo, hi) }.reduce(_.unionByName(_))
       } else {
         val scratch = java.nio.file.Files.createTempDirectory("graft-colo-")
         sys.addShutdownHook(graft.util.Fs.deleteRecursively(scratch))
-        sliceIdxs.zipWithIndex.foreach { case (si, i) =>
-          sliceAgg(si).write.mode("overwrite").parquet(s"$scratch/slice=$i")
+        slices.zipWithIndex.foreach { case ((_, lo, hi), i) =>
+          sliceAgg(lo, hi).write.mode("overwrite").parquet(s"$scratch/slice=$i")
           // separate jobs: each slice's shuffle state goes unreachable
           // here, so the ContextCleaner can reap it before the next slice
           // runs — the disk high-water stays one slice, the entire point

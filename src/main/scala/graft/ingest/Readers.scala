@@ -48,8 +48,14 @@ object Readers {
    *  (cvp_bucket_event_lambda_handler.py:45,52), with per-file identity and
    *  file metadata columns. */
   def lines(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .select(
+    textLines(spark.read.text(path))
+
+  /** The [[lines]] projection over a text-source DataFrame, batch
+   *  (`read.text`) or streaming (`readStream.text`), so both paths carry
+   *  the same `file` string — the key `Metadata.keyColumn` and the ES
+   *  `_id` derive from. */
+  def textLines(text: DataFrame): DataFrame =
+    text.select(
         col("value"),
         input_file_name().as("file"),
         col("_metadata.file_size").as("file_size"),

@@ -31,30 +31,14 @@ object ValidationPipeline {
       errorHistogram: DataFrame,
       hasSequential: Boolean)   // suite.sequential — avoids probing the DF
 
-  /** Above this many rule sections the wide validation select runs as a
-   *  [[graft.plans.FencedProject]] (row-mode codegen). Calibrated on the
-   *  two shipped corpora: the 43-section config_2.ini overflows janino's
-   *  64 KB method limit inside WholeStageCodegen (compile failure →
-   *  silent interpreted fallback for the whole stage), while the
-   *  22-section odejson suite compiles in-stage and runs 1.45× FASTER
-   *  un-fenced (7.1 s vs 10.4 s single-thread on the 100k-record
-   *  head-to-head input) — so the fence must not fire below the real
-   *  overflow point. 32 splits the calibration interval; PlanSpec pins
-   *  both sides (config2 fenced+compiling, odejson un-fenced+compiling).
-   *  Above the threshold the fence fires UNCONDITIONALLY (skip the
-   *  probe on suites known to overflow); below it the decision is
-   *  COMPILE-AWARE — see [[unfencedOverflows]] — because payload-heavy
-   *  small suites can overflow too (r14 verdict item 2).
-   *  Overridable for measurement: `-Dgraft.fence.threshold=N`. */
-  def WideSuiteRuleThreshold: Int =
-    sys.props.get("graft.fence.threshold").map(_.toInt).getOrElse(32)
-
-  /** One fence decision per (suite, input schema): generated-code size
-    * scales with enum/list/conditional PAYLOADS, not section count alone
-    * (r14 verdict item 2 — a 31-section suite with 500-value enums
-    * overflows janino below the count threshold), so the sub-threshold
-    * branch probe-compiles once and caches. Both components are case
-    * classes / StructType — stable value equality. */
+  /** One fence decision per (suite, input schema), made by the probe
+    * alone ([[unfencedOverflows]]): generated-code size scales with
+    * enum/list/conditional PAYLOADS, not section count (a 30-section
+    * timestamp suite overflows janino while the 22-section odejson suite
+    * compiles whole-stage and runs 1.45× faster un-fenced), so the
+    * un-fenced candidate is compiled once and the answer cached. Both
+    * key components are case classes / StructType — stable value
+    * equality. */
   private val fenceProbeCache =
     new java.util.concurrent.ConcurrentHashMap[(ValidationSuite, StructType), java.lang.Boolean]()
 
@@ -78,7 +62,11 @@ object ValidationPipeline {
         true
     }
 
-  /** Validate parsed records that already carry a `file` column. */
+  /** Validate parsed records that already carry a `file` column: one
+   *  select of every record column, the skip flags, then `validations`.
+   *  The cached codegen probe alone decides whether that select runs as
+   *  a plain projection or as a [[graft.plans.FencedProject]] (row-mode
+   *  codegen, for suites whose rule expression overflows whole-stage). */
   def validateRecords(records: DataFrame, suite: ValidationSuite): DataFrame = {
     // reader-internal columns are hidden from the rule compiler — UNLESS
     // the suite itself addresses the name (a positional-CSV rule section
@@ -88,31 +76,14 @@ object ValidationPipeline {
       suite.scalarRules.map(_.path).filterNot(_.contains('.')).toSet
     val schema = StructType(records.schema.fields.filterNot(f =>
       reserved.contains(f.name)))
-    val skips = RuleCompiler.skipFlagColumns(suite, schema)
-    val ruleCount = suite.scalarRules.size + suite.listRules.size
-    // Wide suite: one fenced projection carrying every input column +
-    // skip flags + validations, so the giant rule expression compiles
-    // via row-mode codegen instead of overflowing whole-stage.
-    def fenced = {
-      val cols = records.columns.map(c => col(quoteIfNeeded(c))).toSeq ++
-        skips.map { case (path, c) => c.as(RuleCompiler.skipFlagName(path)) } :+
-        RuleCompiler.validationsColumn(suite, schema).as("validations")
-      graft.plans.FencedProject.select(records, cols)
-    }
-    def unfenced = {
-      val withSkips = skips.foldLeft(records) { case (df, (path, c)) =>
-        df.withColumn(RuleCompiler.skipFlagName(path), c)
-      }
-      withSkips.withColumn("validations", RuleCompiler.validationsColumn(suite, schema))
-    }
-    if (ruleCount > WideSuiteRuleThreshold) fenced
-    else {
-      // COMPILE-AWARE fence below the count threshold: trust janino,
-      // not the section count (one cached driver-side compile per suite)
-      val overflows = fenceProbeCache.computeIfAbsent((suite, records.schema),
-        _ => java.lang.Boolean.valueOf(unfencedOverflows(unfenced)))
-      if (overflows) fenced else unfenced
-    }
+    val cols = records.columns.map(c => col(quoteIfNeeded(c))).toSeq ++
+      RuleCompiler.skipFlagColumns(suite, schema).map { case (path, c) =>
+        c.as(RuleCompiler.skipFlagName(path)) } :+
+      RuleCompiler.validationsColumn(suite, schema).as("validations")
+    lazy val unfenced = records.select(cols: _*)
+    val overflows = fenceProbeCache.computeIfAbsent((suite, records.schema),
+      _ => java.lang.Boolean.valueOf(unfencedOverflows(unfenced)))
+    if (overflows) graft.plans.FencedProject.select(records, cols) else unfenced
   }
 
   private def quoteIfNeeded(name: String): String =
@@ -128,10 +99,8 @@ object ValidationPipeline {
    *  8.7 s on 32 cores under the chunked plan. 512 MB ≈ 4 default scan
    *  partitions — below that the single-exchange per-file plan wins
    *  (small-file fixtures measure ~equal, and it is one exchange
-   *  cheaper). Overridable: `-Dgraft.sequential.giantFileBytes=N`. */
-  def GiantFileBytesThreshold: Long =
-    sys.props.get("graft.sequential.giantFileBytes").map(_.toLong)
-      .getOrElse(512L * 1024 * 1024)
+   *  cheaper). */
+  val GiantFileBytesThreshold: Long = 512L * 1024 * 1024
 
   /** Serial-unit chunk size the auto-selector uses — mid-range of the
    *  documented ~10⁵–10⁶-records-per-chunk contract (serial numbers
@@ -204,32 +173,6 @@ object ValidationPipeline {
               chunkSerials: Option[Long] = None): Result = {
     val records = Readers.ndjson(spark, path, schema)
     val validated = validateRecords(records, suite)
-    val chosen =
-      if (suite.sequential) chunkSerials.orElse(autoChunkSerials(spark, path))
-      else chunkSerials
-    run(validated, suite, chosen)
-  }
-
-  /** [[runJson]] with the validated frame persisted (MEMORY_AND_DISK —
-   *  the [[writeAll]] posture): a SEQUENTIAL suite's totals/histogram
-   *  fold the sequential verdict in, so their plans consume the
-   *  validated frame TWICE (once under the per-file aggregate, once
-   *  under the sequential window chain) and without materialization
-   *  each single-sink consumer re-parses and re-validates the whole
-   *  corpus — two full NDJSON scans per query (measured: both branches
-   *  carry their own `Scan text` in the q_ode_error_histogram plan).
-   *  Both branches evaluate inside ONE action, so a lazy persist is
-   *  enough (block-level locking dedups the fill). Callers that drive
-   *  ONE consumer of `validated` (q_ode_sequential) keep plain
-   *  [[runJson]], as do callers of [[writeAll]], which persists itself; the
-   *  caller's harness (BenchHarness / Verify) clears the cache after the
-   *  action. */
-  def runJsonShared(spark: SparkSession, path: String, suite: ValidationSuite,
-                    schema: StructType = OdeSchema.record,
-                    chunkSerials: Option[Long] = None): Result = {
-    val records = Readers.ndjson(spark, path, schema)
-    val validated = validateRecords(records, suite)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val chosen =
       if (suite.sequential) chunkSerials.orElse(autoChunkSerials(spark, path))
       else chunkSerials

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Last}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -158,7 +158,8 @@ object AsOf {
    * same key group (null-extended when none). Key/time columns are
    * resolved by name against each side; time columns must share a type.
    * `tieBreak` names a right column that deterministically picks among
-   * right rows with identical (key, time).
+   * right rows with identical (key, time). The session must install
+   * `GraftExtensions`, which lowers the node; without it planning fails.
    */
   def joinAsOf(
       left: DataFrame,
@@ -167,13 +168,6 @@ object AsOf {
       rightTimeCol: String,
       keys: Seq[(String, String)],
       tieBreak: Option[String] = None): DataFrame = {
-    val spark = left.sparkSession
-    // Safety net for sessions built without GraftExtensions: the same
-    // rule in the post-hoc user batch (idempotent if already lowered).
-    if (!spark.experimental.extraOptimizations.contains(LowerAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LowerAsOfJoin
-
     val lp = GraftBridge.analyzed(left)
     val rp0 = GraftBridge.analyzed(right)
     // self-join: both sides of the SAME analyzed plan share exprIds, and
@@ -199,7 +193,7 @@ object AsOf {
       require(a.dataType == b.dataType,
         s"as-of key type mismatch on ($lk, $rk): ${a.dataType} vs ${b.dataType}")
     }
-    GraftBridge.ofRows(spark, AsOfJoin(
+    GraftBridge.ofRows(left.sparkSession, AsOfJoin(
       lp, rp, lt, rt,
       keys.map(k => attr(lp, k._1)), keys.map(k => attr(rp, k._2)),
       tieBreak.map(attr(rp, _))))

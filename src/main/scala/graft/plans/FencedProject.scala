@@ -34,6 +34,11 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
  * stages; the one extra cost is the UnsafeRow materialization at this
  * operator's boundary — which a stage boundary would pay anyway.
  *
+ * When to fence: the codegen probe in `ValidationPipeline.validateRecords`
+ * alone decides. It compiles the un-fenced select once per (suite, input
+ * schema) on the driver and fences only when janino fails; section count
+ * plays no part, since code size follows the rule payloads.
+ *
  * Output attributes are captured at construction (not derived from
  * aliases) because the analyzer's `CleanupAliases` strips top-level
  * aliases from non-Project nodes; positions, names, and exprIds stay

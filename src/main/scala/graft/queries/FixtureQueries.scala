@@ -94,30 +94,34 @@ private[graft] trait FixtureQueries { this: Queries.type =>
   private[graft] def odeSequentialChunked(s: SparkSession, dir: String): DataFrame = {
     val records = Readers.ndjson(s, s"$Fix/odejson/data/*.json*", OdeSchema.record)
     val validated = ValidationPipeline.validateRecords(records, suiteOde)
-    val skipPaths = suiteOde.scalarRules.filter(_.skipConditions.nonEmpty).map(_.path)
-    val flagCols = skipPaths.map(p => col(RuleCompiler.skipFlagName(p)))
-    val std = SequentialChecks.withStandardColumns(validated, col("file"), extra = flagCols)
-    SequentialChecks(std,
-      skipPaths.map(p => p -> col(RuleCompiler.skipFlagName(p))).toMap,
-      chunkSerials = Some(4L))
+    ValidationPipeline.run(validated, suiteOde, Some(4L)).sequential
       .select(basename(col("file")).as("file"), col("field_path"),
         col("valid"), col("details"), col("serial_number"))
   }
 
-  /** A1, A2, A4, K3: per-file totals (sequential row folded in). */
-  private[graft] def odeFileTotals(s: SparkSession, dir: String): DataFrame = {
-    val res = ValidationPipeline.runJsonShared(s, s"$Fix/odejson/data/*.json*", suiteOde)
-    res.fileTotals.select(basename(col("file")).as("file"),
-      col("num_messages_total"), col("num_validations"), col("num_errors"),
-      col("num_error_messages"), col("num_valid"))
+  /** [[ValidationPipeline.runJson]] over the odejson fixture with
+   *  `validated` persisted (MEMORY_AND_DISK) before any action: the
+   *  sequential suite's totals and histogram fold the sequential verdict
+   *  in, so each plan reads `validated` twice, and without the cache each
+   *  read re-scans and re-validates the text. Both reads run inside ONE
+   *  action, so the lazy persist is filled once; the caller's harness
+   *  (BenchHarness / Verify) clears the cache after the action. */
+  private def odeResultCached(s: SparkSession): ValidationPipeline.Result = {
+    val res = ValidationPipeline.runJson(s, s"$Fix/odejson/data/*.json*", suiteOde)
+    res.validated.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    res
   }
 
+  /** A1, A2, A4, K3: per-file totals (sequential row folded in). */
+  private[graft] def odeFileTotals(s: SparkSession, dir: String): DataFrame =
+    odeResultCached(s).fileTotals.select(basename(col("file")).as("file"),
+      col("num_messages_total"), col("num_validations"), col("num_errors"),
+      col("num_error_messages"), col("num_valid"))
+
   /** A3: error-message histogram. */
-  private[graft] def odeErrorHistogram(s: SparkSession, dir: String): DataFrame = {
-    val res = ValidationPipeline.runJsonShared(s, s"$Fix/odejson/data/*.json*", suiteOde)
-    res.errorHistogram.select(basename(col("file")).as("file"),
+  private[graft] def odeErrorHistogram(s: SparkSession, dir: String): DataFrame =
+    odeResultCached(s).errorHistogram.select(basename(col("file")).as("file"),
       col("error_message"), col("occurrences"))
-  }
 
   /** S7: positional CSV ingest + validation. */
   private[graft] def csvFieldValidations(s: SparkSession, dir: String): DataFrame = {

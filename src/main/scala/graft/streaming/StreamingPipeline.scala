@@ -36,14 +36,7 @@ object StreamingPipeline {
             schema: StructType = OdeSchema.record,
             trigger: Trigger = Trigger.AvailableNow(),
             extraSinks: Seq[ValidationPipeline.Result => Unit] = Nil): StreamingQuery = {
-    val lines = spark.readStream.text(globPath)
-      .select(
-        col("value"),
-        col("_metadata.file_path").as("file"),
-        col("_metadata.file_size").as("file_size"),
-        col("_metadata.file_modification_time").as("file_modification_time"))
-      .filter(length(trim(col("value"))) > 0)
-
+    val lines = Readers.textLines(spark.readStream.text(globPath))
     val parsed = Readers.parseNdjsonLines(lines, schema)
       // K2 operational counters (SURVEY §2.8): observe() attaches
       // aggregates to the streaming plan itself — per-micro-batch record /

@@ -10,7 +10,7 @@ import graft.model._
 class ConfigSpec extends AnyFunSuite {
 
   private val ref = "/root/reference/odevalidator"
-  private lazy val config2 = SuiteLoader.fromFile(s"$ref/config_2.ini")
+  private lazy val config2 = SuiteLoader.fromFile(Queries.config2IniPath)
   private lazy val csvCfg = SuiteLoader.fromFile(s"$ref/csvconfig_2.ini")
   private lazy val jsonCfg = SuiteLoader.fromFile(s"$ref/jsontestconfig_2.ini")
 

@@ -310,6 +310,29 @@ class GeoSpec extends AnyFunSuite {
     assert(oneShot.nonEmpty && sliced == oneShot)
   }
 
+  test("colocationPairsSliced == one-shot at a fine dtNs over a long span") {
+    // 1 ms buckets over ~8 hours: millions of buckets, a handful of
+    // populated slices. Three clusters, each straddling a slice edge of
+    // the default 32768-bucket slices; one before epoch 0, where bucket
+    // and slice ids are negative
+    val ms = 1000000L
+    val slice = 32768L * ms
+    val pts = Seq(-100L, 150L, 330L).zipWithIndex.flatMap { case (edge, c) =>
+      (-3 to 3).map { j =>
+        ((j + 3) % 4 + 10 * c, (10 * c + j + 3).toLong, edge * slice + j * 400000L,
+          0.005 + 0.0001 * ((j + 3) % 2), 0.005)
+      }
+    }.toDF("k", "id", "ts", "lat", "lon")
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => (x.getInt(0), x.getInt(1),
+        x.getLong(2), x.getDouble(3))).toSet
+    val oneShot = agg(graft.ext.Geo.colocationPairs(pts, "k", "id", "ts",
+      "lat", "lon", distM = 300.0, dtNs = ms, cellDeg = 0.01))
+    val sliced = agg(graft.ext.Geo.colocationPairsSliced(pts, "k", "id", "ts",
+      "lat", "lon", distM = 300.0, dtNs = ms, cellDeg = 0.01))
+    assert(oneShot.size >= 9 && sliced == oneShot)
+  }
+
   test("typeTransitions: bigram counts and row-normalized probabilities") {
     val ns = 1000000000L
     val ev = Seq((1, 0L, 0L, "a"), (1, 1L * ns, 1L, "b"), (1, 2L * ns, 2L, "a"),

@@ -508,15 +508,14 @@ class PlanSpec extends AnyFunSuite {
 
   test("sub-threshold giant-payload suite: the compile-aware fence catches " +
       "what the count threshold misses (r14 verdict item 2)") {
-    // 30 sections < WideSuiteRuleThreshold=32, but each enum carries a
+    // 30 sections — fewer than the shipped 43 — but each carries a
     // payload big enough that the UN-fenced wide select overflows janino
-    // — exactly the silent-interpreted-fallback class the count-based
+    // — exactly the silent-interpreted-fallback class a section-count
     // fence could not see. The pipeline must probe-compile and fence.
     import graft.model.{FieldRule, FieldTypes, FixedTime, ValidationSuite}
     import graft.pipeline.ValidationPipeline
     import org.apache.spark.sql.types.StructType
     val nRules = 30
-    assert(nRules <= ValidationPipeline.WideSuiteRuleThreshold)
     // timestamp rules are the payload-heavy class: the dateutil parse
     // chain + python-repr error strings generate far more code per
     // section than an enum (whose value list folds to one InSet)
@@ -556,9 +555,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_ode_field_validations: 22-rule select stays whole-stage (and compiles)") {
-    // The other side of the fence threshold: the head-to-head odejson
-    // suite compiles in-stage and is 1.45× faster un-fenced — a threshold
-    // lowered below 22 (or a suite growth past it) shows up here.
+    // The other side of the fence: the head-to-head odejson suite
+    // compiles in-stage and is 1.45× faster un-fenced — a probe that
+    // fences it (or a suite growth past janino's limit) shows up here.
     val exec = Queries.all("q_ode_field_validations")(spark, dir)
       .queryExecution.executedPlan
     assert(!exec.toString.contains("FencedProject"),
@@ -567,6 +566,27 @@ class PlanSpec extends AnyFunSuite {
       org.apache.spark.sql.GraftBridge.compileCodegenStages(exec)
     assert(fenced == 0)
     assert(stages >= 1)
+  }
+
+  test("q_ode_error_histogram: both branches read the persisted validated frame") {
+    // the sequential suite's histogram reads `validated` under the
+    // per-file aggregate AND under the sequential windows; the query
+    // persists it, so the text is scanned once, inside the cache
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    try {
+      val exec = Queries.all("q_ode_error_histogram")(spark, dir)
+        .queryExecution.executedPlan
+      val cached = helper.collect(exec) { case s: InMemoryTableScanExec => s }
+      assert(cached.size == 2, s"expected both branches on the cache:\n$exec")
+      assert(cached.map(_.relation.cacheBuilder).distinct.size == 1)
+      assert(helper.collect(exec) { case s: FileSourceScanExec => s }.isEmpty,
+        "a branch re-scans the text outside the cache")
+      assert(helper.collect(cached.head.relation.cachedPlan) {
+        case s: FileSourceScanExec => s }.size == 1)
+    } finally spark.catalog.clearCache()
   }
 
   test("q_geo_radius_join: probe halo broadcasts — the point table never shuffles") {

@@ -126,11 +126,8 @@ class SequentialChunkedSpec extends AnyFunSuite {
   }
 
   test("auto-selector: an object past the byte threshold selects the chunked plan") {
-    System.setProperty("graft.sequential.giantFileBytes", "64")
-    try {
-      assert(graft.pipeline.ValidationPipeline.autoChunkSerials(spark, fixPath)
-        .contains(graft.pipeline.ValidationPipeline.AutoChunkSerials))
-    } finally System.clearProperty("graft.sequential.giantFileBytes")
+    assert(graft.pipeline.ValidationPipeline.autoChunkSerials(spark, fixPath, 64)
+      .contains(graft.pipeline.ValidationPipeline.AutoChunkSerials))
   }
 
   test("auto-selector sizes .gz objects by gzip ISIZE, not compressed bytes " +
@@ -171,10 +168,8 @@ class SequentialChunkedSpec extends AnyFunSuite {
     val singleRes = graft.pipeline.ValidationPipeline
       .runJson(spark, fixPath, suite)
     // forced-giant threshold → chunked branch, same corpus
-    System.setProperty("graft.sequential.giantFileBytes", "64")
-    val chunkedRes =
-      try graft.pipeline.ValidationPipeline.runJson(spark, fixPath, suite)
-      finally System.clearProperty("graft.sequential.giantFileBytes")
+    val chunkedRes = graft.pipeline.ValidationPipeline.runJson(spark, fixPath, suite,
+      chunkSerials = graft.pipeline.ValidationPipeline.autoChunkSerials(spark, fixPath, 64))
     val s = multiset(singleRes.sequential)
     val c = multiset(chunkedRes.sequential)
     assert(c == s)

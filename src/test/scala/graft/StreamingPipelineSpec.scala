@@ -29,6 +29,11 @@ class StreamingPipelineSpec extends AnyFunSuite {
         .collect().map(r => r.toString).sorted.toSeq
 
     val streamTotals = spark.read.parquet(s"$tmp/out/file_totals")
+    // full strings, not basenames: Metadata.keyColumn and the ES `_id`
+    // derive from the whole `file` value
+    def files(df: org.apache.spark.sql.DataFrame) =
+      df.select("file").collect().map(_.getString(0)).sorted.toSeq
+    assert(files(streamTotals) == files(batch.fileTotals))
     assert(norm(streamTotals, "num_messages_total", "num_validations", "num_errors",
       "num_error_messages", "num_valid") ==
       norm(batch.fileTotals, "num_messages_total", "num_validations", "num_errors",
