@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
  * overshoot it by an order of magnitude (the six r10 finds ran 31–140×),
  * not to police constant factors, which BENCHDETAIL tracks at base SF.
  *
- *   sbt "runMain graft.ScaleBench BENCHDETAIL_r11.json target/sf1 10"
+ *   sbt "runMain graft.ScaleBench BENCHDETAIL_r15.json target/sf1 10"
  *
  * Output: one `[scalebench]` line per query + a final Bench-format JSON
  * line with per-query seconds, per-query ok, and `all_ok`. Committed

@@ -17,86 +17,64 @@ import org.apache.spark.sql.functions._
  * (cvp...py:123-138) iterates validate_queue's FULL result list, which
  * includes the one extra sequential RecordValidationResult appended per
  * file (validator.py:408-415) — so that synthetic record adds 1 to
- * num_messages_total, its failure count to num_errors, etc. Use
- * [[fileTotalsWithSequential]] for that exact semantic;
- * [[fileTotals]] alone covers the field-validation records.
+ * num_messages_total, its failure count to num_errors, etc. Pass the
+ * sequential verdicts to [[fileTotals]] and [[errorHistogram]] and they
+ * fold in as exactly that extra record; without them both cover the
+ * field-validation records alone.
  */
 object FileAggregates {
 
   /** failed-check count per record. */
-  def failedCount: Column =
+  private def failedCount: Column =
     size(filter(col("validations"), v => !v.getField("valid")))
 
-  /** A1-A4 (cvp...py:115-138,153): per-file totals over the per-record
-   *  field validations — num_messages_total, num_validations (Σ checks),
-   *  num_errors (Σ failed checks), num_error_messages (records with ≥1
-   *  failure), num_valid. */
-  def fileTotals(validated: DataFrame): DataFrame =
-    validated
-      .withColumn("__failed", failedCount)
+  /** A1-A4 + K3 (cvp...py:115-153): per-file num_messages_total,
+   *  num_validations (Σ checks), num_errors (Σ failed checks),
+   *  num_error_messages (records with ≥1 failure), num_valid, and the
+   *  verdict line (PASSED iff zero failures).
+   *  @param sequential output of SequentialChecks: (file, field_path,
+   *                    valid, details, serial_number); each file's
+   *                    verdict rows count as ONE extra record. */
+  def fileTotals(validated: DataFrame, sequential: Option[DataFrame] = None): DataFrame = {
+    val records = validated.select(col("file"),
+      size(col("validations")).as("checks"), failedCount.as("failed"))
+    // one summary row per file, not a collected array: a giant
+    // all-failing file would otherwise become one huge row
+    val extra = sequential.map(_.groupBy(col("file")).agg(
+      count(lit(1)).as("checks"), count(when(!col("valid"), 1)).as("failed")))
+    extra.fold(records)(records.unionByName(_))
       .groupBy(col("file"))
       .agg(
         count(lit(1)).as("num_messages_total"),
-        sum(size(col("validations"))).as("num_validations"),
-        sum(col("__failed")).as("num_errors"),
-        sum(when(col("__failed") > 0, 1L).otherwise(0L)).as("num_error_messages"))
-      .withColumn("num_valid", col("num_messages_total") - col("num_error_messages"))
-
-  /** A1-A4 with the sequential result row folded in, exactly like the
-   *  reference loop: per file, the sequential RecordValidationResult counts
-   *  as ONE extra record whose validations are the per-file sequential
-   *  verdict rows (failures, or the single passing sentinel).
-   *  @param sequential output of SequentialChecks: (file, field_path,
-   *                    valid, details, serial_number). */
-  def fileTotalsWithSequential(validated: DataFrame, sequential: DataFrame): DataFrame = {
-    val base = fileTotals(validated)
-    val seq = sequential.groupBy(col("file")).agg(
-      count(lit(1)).as("seq_validations"),
-      sum(when(!col("valid"), 1L).otherwise(0L)).as("seq_errors"))
-    base.join(seq, Seq("file"), "left")
-      .select(
-        col("file"),
-        (col("num_messages_total") + when(col("seq_validations").isNotNull, 1L).otherwise(0L))
-          .as("num_messages_total"),
-        (col("num_validations") + coalesce(col("seq_validations"), lit(0L)))
-          .as("num_validations"),
-        (col("num_errors") + coalesce(col("seq_errors"), lit(0L))).as("num_errors"),
-        (col("num_error_messages") +
-          when(coalesce(col("seq_errors"), lit(0L)) > 0, 1L).otherwise(0L))
-          .as("num_error_messages"))
-      .withColumn("num_valid", col("num_messages_total") - col("num_error_messages"))
+        sum(col("checks")).as("num_validations"),
+        sum(col("failed")).as("num_errors"),
+        sum(when(col("failed") > 0, 1L).otherwise(0L)).as("num_error_messages"))
+      .select(col("file"), col("num_messages_total"), col("num_validations"),
+        col("num_errors"), col("num_error_messages"),
+        (col("num_messages_total") - col("num_error_messages")).as("num_valid"),
+        when(col("num_errors") === 0, lit("PASSED")).otherwise(lit("FAILED")).as("verdict"))
   }
 
   /** Reference error-histogram key (cvp...py:131): Python renders a null
    *  field_path as 'None'. */
-  def errorMessage(fieldPath: Column, details: Column): Column =
+  private def errorMessage(fieldPath: Column, details: Column): Column =
     concat(lit("Invalid field '"), coalesce(fieldPath, lit("None")),
       lit("' due to "), details)
 
   /** A3 (cvp...py:122-135,143-145): distinct failure message → occurrence
    *  count, per file; message format "Invalid field '<path>' due to
-   *  <details>" exactly as the reference's error_dict keys. */
-  def errorHistogram(validated: DataFrame): DataFrame =
-    validated
-      .select(col("file"), explode(col("validations")).as("v"))
-      .filter(!col("v.valid"))
-      .groupBy(col("file"),
-        errorMessage(col("v.field_path"), col("v.details")).as("error_message"))
-      .agg(count(lit(1)).as("occurrences"))
-
-  /** A3 with sequential failures folded in — the reference loop iterates
-   *  the full result list including the sequential record (cvp...py:123-135;
-   *  its None field_path renders as 'None'). */
-  def errorHistogramWithSequential(validated: DataFrame, sequential: DataFrame): DataFrame = {
-    val fieldMsgs = validated
-      .select(col("file"), explode(col("validations")).as("v"))
-      .filter(!col("v.valid"))
-      .select(col("file"), errorMessage(col("v.field_path"), col("v.details")).as("error_message"))
-    val seqMsgs = sequential
+   *  <details>" exactly as the reference's error_dict keys. The
+   *  `sequential` verdict rows join the field verdicts as the reference's
+   *  extra record (its None field_path renders as 'None'). */
+  def errorHistogram(validated: DataFrame, sequential: Option[DataFrame] = None): DataFrame = {
+    val fields = validated.select(col("file"), explode(col("validations")).as("v"))
+      .select(col("file"), col("v.field_path").as("field_path"),
+        col("v.valid").as("valid"), col("v.details").as("details"))
+    sequential.map(_.select(col("file"), col("field_path"), col("valid"), col("details")))
+      .fold(fields)(fields.unionByName(_))
       .filter(!col("valid"))
-      .select(col("file"), errorMessage(col("field_path"), col("details")).as("error_message"))
-    fieldMsgs.unionByName(seqMsgs)
-      .groupBy(col("file"), col("error_message"))
+      .groupBy(col("file"),
+        errorMessage(col("field_path"), col("details")).as("error_message"))
       .agg(count(lit(1)).as("occurrences"))
   }
 
@@ -122,32 +100,29 @@ object FileAggregates {
    *              for the CVP families, num_valid + num_error_messages.
    */
   def metricDatums(meta: DataFrame): DataFrame = {
-    def family(nameSpace: String, metric: String, filterCond: Column,
-               dim1: (String, Column), dim2: (String, Column), value: Column): DataFrame =
-      meta.filter(filterCond)
-        .groupBy(dim1._2.as("dim1_value"), dim2._2.as("dim2_value"))
-        .agg(sum(value).as("value"), count(lit(1)).as("file_count"))
-        .select(
-          lit(nameSpace).as("namespace"), lit(metric).as("metric_name"),
-          lit(dim1._1).as("dim1_name"), col("dim1_value"),
-          lit(dim2._1).as("dim2_name"), col("dim2_value"),
-          col("value"), col("file_count"))
-
-    val waze = family("dot-sdc-waze-submissions-bucket-metric",
-      "Counts by state and traffic type", col("Dataset") === "waze",
-      "State" -> col("State"), "TrafficType" -> col("TrafficType"), lit(1L))
-    val wazeZero = family("dot-sdc-waze-zero-byte-submissions-metric",
-      "Zero Byte Submissions by State and traffic type",
-      col("Dataset") === "waze" && col("ContentLength") === 166,
-      "State" -> col("State"), "TrafficType" -> col("TrafficType"), lit(1L))
-    val cv = family("dot-sdc-cv-submissions-bucket-metric",
-      "Counts by provider and datatype", col("Dataset") === "cv",
-      "DataProvider" -> col("DataProvider"), "DataType" -> col("DataType"), lit(10L))
-    val curated = family("dot-sdc-waze-curated-bucket-metric",
-      "Counts by state and table name", col("Dataset") =!= "manifest",
-      "State" -> col("State"), "TableName" -> col("TableName"), lit(1L))
-
-    waze.unionByName(wazeZero).unionByName(cv).unionByName(curated)
+    // one (family, dims, value) datum per family whose condition holds;
+    // a null Dataset matches none
+    def datum(on: Column, nameSpace: String, metric: String,
+              dim1: String, dim2: String, value: Long): Column =
+      struct(coalesce(on, lit(false)).as("on"), lit(nameSpace).as("namespace"),
+        lit(metric).as("metric_name"), lit(dim1).as("dim1_name"),
+        col(dim1).as("dim1_value"), lit(dim2).as("dim2_name"),
+        col(dim2).as("dim2_value"), lit(value).as("value"))
+    val dataset = col("Dataset")
+    val datums = array(
+      datum(dataset === "waze", "dot-sdc-waze-submissions-bucket-metric",
+        "Counts by state and traffic type", "State", "TrafficType", 1L),
+      datum(dataset === "waze" && col("ContentLength") === 166,
+        "dot-sdc-waze-zero-byte-submissions-metric",
+        "Zero Byte Submissions by State and traffic type", "State", "TrafficType", 1L),
+      datum(dataset === "cv", "dot-sdc-cv-submissions-bucket-metric",
+        "Counts by provider and datatype", "DataProvider", "DataType", 10L),
+      datum(dataset =!= "manifest", "dot-sdc-waze-curated-bucket-metric",
+        "Counts by state and table name", "State", "TableName", 1L))
+    meta.select(explode(filter(datums, _.getField("on"))).as("d"))
+      .groupBy(Seq("namespace", "metric_name", "dim1_name", "dim1_value",
+        "dim2_name", "dim2_value").map(f => col(s"d.$f").as(f)): _*)
+      .agg(sum(col("d.value")).as("value"), count(lit(1)).as("file_count"))
   }
 
   /** A5 CVP variant (cvp...py:155-227): per (DataProvider, DataType) —
@@ -161,9 +136,4 @@ object FileAggregates {
         sum(coalesce(col("num_valid"), lit(0L))).as("valid_messages"),
         sum(coalesce(col("num_error_messages"), lit(0L))).as("invalid_messages"),
         count(lit(1)).as("data_file_count"))
-
-  /** Per-file verdict line (cvp...py:141-151): PASSED iff zero failures. */
-  def fileVerdicts(totals: DataFrame): DataFrame =
-    totals.withColumn("verdict",
-      when(col("num_errors") === 0, lit("PASSED")).otherwise(lit("FAILED")))
 }

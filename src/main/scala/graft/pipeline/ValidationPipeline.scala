@@ -188,30 +188,23 @@ object ValidationPipeline {
 
   def run(validated: DataFrame, suite: ValidationSuite,
           chunkSerials: Option[Long] = None): Result = {
-    val sequential =
-      if (suite.sequential) {
-        val skipPaths = suite.scalarRules.filter(_.skipConditions.nonEmpty).map(_.path)
-        val flagCols = skipPaths.map(p => col(RuleCompiler.skipFlagName(p)))
-        val std = SequentialChecks.withStandardColumns(
-          validated, col("file"), extra = flagCols)
-        SequentialChecks(std,
-          skipPaths.map(p => p -> col(RuleCompiler.skipFlagName(p))).toMap,
-          chunkSerials)
-      } else {
-        validated.sparkSession.emptyDataFrame
-      }
-
-    // A2/A3 scope matches the reference loop (cvp...py:123-138): the
-    // sequential result row is folded into totals and histogram.
-    val (totals, hist) =
-      if (suite.sequential)
-        (FileAggregates.fileVerdicts(
-          FileAggregates.fileTotalsWithSequential(validated, sequential)),
-          FileAggregates.errorHistogramWithSequential(validated, sequential))
-      else
-        (FileAggregates.fileVerdicts(FileAggregates.fileTotals(validated)),
-          FileAggregates.errorHistogram(validated))
-    Result(validated, sequential, totals, hist, suite.sequential)
+    val sequential = Option.when(suite.sequential) {
+      val skipPaths = suite.scalarRules.filter(_.skipConditions.nonEmpty).map(_.path)
+      val flagCols = skipPaths.map(p => col(RuleCompiler.skipFlagName(p)))
+      val std = SequentialChecks.withStandardColumns(
+        validated, col("file"), extra = flagCols)
+      SequentialChecks(std,
+        skipPaths.map(p => p -> col(RuleCompiler.skipFlagName(p))).toMap,
+        chunkSerials)
+    }
+    // A2/A3 scope matches the reference loop (cvp...py:123-138): each
+    // file's sequential verdict is one more record in its totals and
+    // histogram.
+    Result(validated,
+      sequential.getOrElse(validated.sparkSession.emptyDataFrame),
+      FileAggregates.fileTotals(validated, sequential),
+      FileAggregates.errorHistogram(validated, sequential),
+      suite.sequential)
   }
 
   /** The one sink fan-out, for a batch run and each streaming micro-batch:

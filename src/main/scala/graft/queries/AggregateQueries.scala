@@ -49,7 +49,7 @@ private[graft] trait AggregateQueries { this: Queries.type =>
 
   /** A1/A2/A4/K3 as hash aggregates over 60k validated records. */
   private[graft] def fileTotalsParquet(s: SparkSession, dir: String): DataFrame =
-    FileAggregates.fileVerdicts(FileAggregates.fileTotals(lineitemValidated(s, dir)))
+    FileAggregates.fileTotals(lineitemValidated(s, dir))
       .select(col("file"), col("num_messages_total"), col("num_validations"),
         col("num_errors"), col("num_error_messages"), col("num_valid"), col("verdict"))
 

@@ -55,7 +55,7 @@ object CloudWatchSink {
     datumRows(df).foreachPartition { it: Iterator[Row] =>
       it.toSeq.groupBy(_.getString(0)).foreach { case (ns, datums) =>
         datums.grouped(chunkSize).foreach { chunk =>
-          val body = s"""{"Namespace":${jsonStr(ns)},"MetricData":[""" +
+          val body = s"""{"Namespace":${Http.jsonStr(ns)},"MetricData":[""" +
             chunk.map(_.getString(1)).mkString(",") + "]}"
           Http.post(url, body, sign = sign)
         }
@@ -117,7 +117,7 @@ object CloudWatchSink {
         it.foreach { r =>
           val ns = r.getString(0)
           val key = s"$bk/$ns/${r.getInt(1)}"
-          val body = s"""{"Namespace":${jsonStr(ns)},"BatchKey":${jsonStr(key)},"MetricData":[""" +
+          val body = s"""{"Namespace":${Http.jsonStr(ns)},"BatchKey":${Http.jsonStr(key)},"MetricData":[""" +
             r.getSeq[String](2).mkString(",") + "]}"
           Http.post(url, body, sign = sign)
         }
@@ -133,12 +133,4 @@ object CloudWatchSink {
         throw new IllegalStateException(s"could not commit ledger marker $marker")
     }
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -28,20 +28,11 @@ import org.apache.spark.sql.functions._
  */
 object ElasticsearchSink {
 
-  /** Minimal JSON string quoting for the `_id` field of the action line. */
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** One `_bulk` NDJSON body: action line + source line per doc. */
   private[sinks] def bulkBody(index: String, docType: String,
                               docs: Seq[(String, String)]): String =
     docs.map { case (id, doc) =>
-      s"""{"index":{"_index":"$index","_type":"$docType","_id":${jsonStr(id)}}}""" +
+      s"""{"index":{"_index":"$index","_type":"$docType","_id":${Http.jsonStr(id)}}}""" +
         "\n" + doc
     }.mkString("", "\n", "\n")
 
@@ -70,12 +61,4 @@ object ElasticsearchSink {
       }
     }
   }
-
-  /** `foreachBatch` adapter: attach the sink to a streaming metadata
-    * pipeline — `writeStream.foreachBatch(ElasticsearchSink.foreachBatch(…))`. */
-  def foreachBatch(endpoint: String, index: String, docType: String,
-                   idCol: String, chunkSize: Int = 500,
-                   sign: Http.HeaderProvider = Http.noHeaders): (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) =>
-      writeBulk(batch, endpoint, index, docType, idCol, chunkSize, sign)
 }

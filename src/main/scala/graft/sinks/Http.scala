@@ -17,6 +17,16 @@ private[sinks] object Http {
 
   val noHeaders: HeaderProvider = (_, _, _) => Map.empty
 
+  /** Minimal JSON string quoting for the few fields the sinks write by
+    * hand (an ES action line's `_id`, a metrics body's keys). */
+  private[sinks] def jsonStr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def post(url: String, body: String,
            contentType: String = "application/json",
            sign: HeaderProvider = noHeaders): Unit = {

@@ -462,7 +462,7 @@ object EngineProperties extends Properties("graft") {
       val df = vals.toDF("ts")
       val both = df.select(
           graft.rules.RuleCompiler.parseTimestamp(col("ts"), None).as("native"),
-          graft.rules.RuleCompiler.parseTimestampColumnSpec(col("ts")).as("spec"))
+          DateutilColumnChain.parseTimestampColumnSpec(col("ts")).as("spec"))
         .collect()
       both.forall(r => r.get(0) == r.get(1))
     }

@@ -589,6 +589,30 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.catalog.clearCache()
   }
 
+  test("q_ode_file_totals: the sequential verdict folds in by union — no join") {
+    // each file's sequential verdict is one more record of its totals,
+    // so the totals need no join back to a second per-file aggregate
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    try {
+      val exec = Queries.all("q_ode_file_totals")(spark, dir)
+        .queryExecution.executedPlan
+      val cached = helper.collect(exec) { case s: InMemoryTableScanExec =>
+        s.relation.cachedPlan }
+      assert(cached.nonEmpty, s"expected the persisted validated frame:\n$exec")
+      val joins = (exec +: cached).flatMap(p => helper.collect(p) { case j: BaseJoinExec => j })
+      assert(joins.isEmpty, s"join in the totals plan:\n$exec")
+    } finally spark.catalog.clearCache()
+  }
+
+  test("q_metric_datums: the four families group once — one exchange, no union") {
+    val p = plan("q_metric_datums")
+    assert(count(p, "Exchange hashpartitioning") == 1, p)
+    assert(!p.contains("Union"), p)
+  }
+
   test("q_geo_radius_join: probe halo broadcasts — the point table never shuffles") {
     val p = plan("q_geo_radius_join")
     assert(p.contains("BroadcastExchange"))
