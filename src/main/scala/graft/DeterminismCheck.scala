@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * depended on Spark's partial-aggregation accumulation order — green on
   * every builder-side run, red on the driver's. A query whose hash
   * depends on partition layout is a broken oracle contract, and a
-  * single-layout check cannot catch it. This main runs EVERY registered
+  * single-layout check cannot catch it. [[run]] runs EVERY registered
   * query twice under deliberately different physical layouts:
   *
   *   - layout A: `spark.sql.shuffle.partitions=7`,
@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * correctness gate applies (column-name sort, `%.10g` floats, sorted
   * rows). Any layout-dependent digit flips the canonical hash.
   *
-  * Usage: `runMain graft.DeterminismCheck <sfDir> [name,name,...]`
+  * Usage: `runMain graft.Tools determinism <sfDir> [name,name,...]`
   * Exits non-zero on any mismatch or error (reported apart).
   * `DeterminismSpec` runs the same invariant over the full registry at
   * sf0.001 in `sbt test`.
@@ -92,10 +92,13 @@ object DeterminismCheck {
     def ok: Boolean = nondeterministic.isEmpty && errors.isEmpty
   }
 
-  /** Runs `names` (all registered queries if empty) under both layouts. */
+  /** Runs `names` (all registered queries if empty) under both layouts.
+    * A name that is not a registry query is an error, not a skip: a typo
+    * must not pass as a clean run over nothing. */
   def run(spark: SparkSession, sfDir: String,
           names: Set[String] = Set.empty,
           quiet: Boolean = false): Outcome = {
+    Tools.unknownQueries(names).foreach(e => throw new IllegalArgumentException(e))
     val todo = SparkEntry.queries
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
     // restore the CALLER's layout afterwards — the shared test session
@@ -109,7 +112,7 @@ object DeterminismCheck {
     // `validated`): clear after each run, or the second layout re-reads
     // the rows the first layout cached instead of recomputing them
     def once(fn: (SparkSession, String) => DataFrame): String =
-      try canon(fn(spark, sfDir)) finally spark.catalog.clearCache()
+      try canon(fn(spark, sfDir)) finally Tools.resetCaches(spark)
     todo.foreach { case (name, fn) =>
       try {
         withLayout(spark, 7, "1m")
@@ -130,17 +133,5 @@ object DeterminismCheck {
       }
     }
     Outcome(nondeterministic.toSeq, errors.toSeq)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = args.lift(1).map(_.split(",").toSet).getOrElse(Set.empty)
-    Verify.pinRouteMtimes()
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    val outcome = run(spark, sfDir, names)
-    println(s"determinism: ${if (outcome.ok) "ALL OK" else
-      s"nondeterministic ${outcome.nondeterministic.mkString(", ")}; errors ${outcome.errors.mkString(", ")}"}")
-    spark.stop()
-    if (!outcome.ok) sys.exit(1)
   }
 }

@@ -4,6 +4,8 @@ import java.math.RoundingMode
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 /**
  * Generates `fixtures/golden/q_compression_ratio.sql` — the value-level
  * DuckDB oracle for the one registry entry with no SQL-expressible
@@ -20,7 +22,7 @@ import java.nio.file.{Files, Paths}
  * selects zero branches → 0 oracle rows → a LOUD row-count failure,
  * never a silent pass.
  *
- *   sbt "runMain graft.GenCompressionGolden"
+ *   sbt "runMain graft.Tools gen-compression-golden"
  */
 object GenCompressionGolden {
   /** Raw-deflate ratio, default level — inline and independent of
@@ -47,11 +49,7 @@ object GenCompressionGolden {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
 
-  def main(args: Array[String]): Unit = {
-    val sfDirs = if (args.nonEmpty) args.toSeq
-    else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("8")
-
+  def run(spark: SparkSession, sfDirs: Seq[String]): Unit = {
     val branches = sfDirs.map { dir =>
       val rows0 = spark.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text").collect()
@@ -86,6 +84,5 @@ object GenCompressionGolden {
     val out = Paths.get("/root/repo/fixtures/golden/q_compression_ratio.sql")
     Files.writeString(out, sql)
     println(s"[gen-compression-golden] wrote $out (${branches.size} corpora)")
-    spark.stop()
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One local-session recipe for every driver-contract main (Verify,
-  * Bench, BenchValidation, PlanAudit) — a config fix applied here (e.g.
+/** One local-session recipe for every main (Verify, Bench and the
+  * [[Tools]] subcommands) — a config fix applied here (e.g.
   * a new required legacy flag) cannot silently diverge between the
   * correctness gate and the benchmark. UTC, classic (non-ANSI) casts,
   * TIMESTAMP(NANOS) surfaced as long. */

@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
  * overshoot it by an order of magnitude (the six r10 finds ran 31–140×),
  * not to police constant factors, which BENCHDETAIL tracks at base SF.
  *
- *   sbt "runMain graft.ScaleBench BENCHDETAIL_r15.json target/sf1 10"
+ *   sbt "runMain graft.Tools scalebench BENCHDETAIL_r15.json target/sf1 10"
  *
  * Output: one `[scalebench]` line per query + a final Bench-format JSON
  * line with per-query seconds, per-query ok, and `all_ok`. Committed
@@ -82,19 +82,19 @@ object ScaleBench {
     "q_ivf_trained", "q_ivf_incremental", "q_ivf_retrain",
     "q_corpus_curation_lsh_md5", "q_column_profile", "q_colocation_sliced")
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: ScaleBench <baselineBenchJson> <sfDir> <mult> [floorSec] [filter]")
+  /** Runs the filtered registry (all of it when `filter` is None) at
+    * `sfDir`, each query against its budget; true when every query ran
+    * within it. `filter` is a comma list of registry names or
+    * `@scalepath[:seed]`. */
+  def run(spark: SparkSession, baselinePath: String, sfDir: String, mult: Double,
+          floorSec: Double, filter: Option[String]): Boolean = {
     val baseline = parseBaseline(
-      scala.io.Source.fromFile(args(0)).getLines().mkString("\n"))
-    val sfDir = args(1)
-    val mult = args(2).toDouble
-    val floorSec = args.lift(3).map(_.toDouble).getOrElse(8.0)
+      scala.io.Source.fromFile(baselinePath).getLines().mkString("\n"))
     // `@scalepath` (r13 verdict item 4): probe composition is MECHANIZED,
     // not prose — top-cost quartile of the baseline board ∪ the standing
     // scale-path families, MINUS the exact-instrument registry annotation
     // (SparkEntry.nonScalePath). Any explicit comma list still works.
-    val only = args.lift(4).map {
+    val only = filter.map {
       case spec if spec.startsWith("@scalepath") =>
         val quartile = baseline.toSeq.sortBy(-_._2)
           .take(math.max(1, baseline.size / 4)).map(_._1).toSet
@@ -125,9 +125,11 @@ object ScaleBench {
           s"rotation=${rotation.size} " +
           s"excluded=${(quartile ++ StandingProbeFamilies).count(SparkEntry.nonScalePath)})")
         composed
-      case list => list.split(",").toSet
+      case list =>
+        val names = list.split(",").toSet
+        Tools.unknownQueries(names).foreach(e => throw new IllegalArgumentException(e))
+        names
     }
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // the SAME harness Bench uses — budgets compare baseline seconds
     // against these, so the measurement must be identical
@@ -152,6 +154,6 @@ object ScaleBench {
       }
     println(BenchHarness.jsonLine("scalebench_total", results, sfDir,
       extraFields = s""""mult":$mult,"""))
-    spark.stop()
+    results.forall(_._3)
   }
 }

@@ -15,14 +15,14 @@ import org.apache.spark.sql.functions._
  *    NEAR-duplicate clusters (Jaccard ≈ 1 − 1/tokens) that survive
  *    exact dedup, the worst case for the LSH/curation family.
  *
- * Run `sbt "runMain graft.ScaleCheck /root/testdata/sf0.1 16"`; the
- * output table is committed per round as SCALECHECK_r{N}.txt.
+ * Run `sbt "runMain graft.Tools scalecheck /root/testdata/sf0.1 16"`;
+ * the output table is committed per round as SCALECHECK_r{N}.txt. A row
+ * that throws prints FAILED and fails the run; the rows after it still
+ * run.
  */
 object ScaleCheck {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val mult = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+  /** Runs every row; true when all finished within their budgets. */
+  def run(spark: SparkSession, dir: String, mult: Int): Boolean = {
     val base = spark.read.parquet(s"$dir/documents.parquet")
     val n = base.count()
 
@@ -45,7 +45,12 @@ object ScaleCheck {
     // linear budget at 32× is scaling, one that needs super-linear
     // headroom is the regression this harness exists to catch)
     val budgetScale = math.max(1.0, mult / 16.0)
-    def time(name: String, budget16Sec: Double)(f: => Long): Unit = {
+    def row(name: String)(body: => Unit): Unit =
+      try body catch { case scala.util.control.NonFatal(e) =>
+        allOk = false
+        println(s"[scalecheck] $name FAILED ($e)")
+      }
+    def time(name: String, budget16Sec: Double)(f: => Long): Unit = row(name) {
       val budgetSec = budget16Sec * budgetScale
       val t0 = System.nanoTime()
       val rows = f
@@ -55,6 +60,20 @@ object ScaleCheck {
       println(f"[scalecheck] $name ${secs}%.1f s (budget ${budgetSec}%.0f s, " +
         f"${if (ok) "ok" else "OVER"}, $rows rows)")
     }
+    /** A row that times the same work at 1× and at mult× (after one warm
+      * 1× run) and fails when their ratio exceeds `maxRatio`. */
+    def ratioRow(name: String, maxRatio: Double, claim: String)(secs: => Int => Double): Unit =
+      row(name) {
+        val f = secs
+        f(1)
+        val tSmall = f(1)
+        val tBig = f(mult)
+        val ratio = tBig / math.max(tSmall, 0.05)
+        val ok = ratio <= maxRatio
+        if (!ok) allOk = false
+        println(f"[scalecheck] $name 1x=${tSmall}%.1f s ${mult}x=${tBig}%.1f s " +
+          f"ratio=${ratio}%.2f (${if (ok) "ok" else "OVER"}, $claim)")
+      }
 
     // ---- text-analysis family (r6 coverage) --------------------------
     time("passage_dedup(n=4)", 15) {
@@ -450,42 +469,6 @@ object ScaleCheck {
       }
     }
 
-    // ---- experimentation/graph batch (r8 continuation) ---------------
-    // Wedge-join jaccard at 16× orders over the SAME part universe: the
-    // co-order graph DENSIFIES (degrees grow with replication), which is
-    // the wedge join's actual 100 TB failure mode — candidate pairs are
-    // Σdeg², never node-pairwise. Runs the registry query's exact shape
-    // on the replicated lineitem; top-20 must stay TakeOrderedAndProject.
-    time("node_jaccard_wedge(16x orders)", 90) {
-      val lp = bigLi
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .filter(col("pk") % 7 === 0).distinct()
-      val und = lp.as("x").join(lp.as("y"),
-          col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("a"), col("y.pk").as("b")).distinct()
-        .localCheckpoint(true)
-      val dir2 = und.unionByName(
-        und.select(col("b").as("a"), col("a").as("b")))
-      val deg = dir2.groupBy(col("a").as("node"))
-        .agg(count(lit(1)).as("deg"))
-      val common = dir2.as("e1").join(dir2.as("e2"),
-          col("e1.a") === col("e2.a") && col("e1.b") < col("e2.b"))
-        .groupBy(col("e1.b").as("pa"), col("e2.b").as("pb"))
-        .agg(count(lit(1)).as("common_cnt"))
-      common
-        .join(deg.select(col("node"), col("deg").as("deg_a")),
-          col("pa") === col("node")).drop("node")
-        .join(deg.select(col("node"), col("deg").as("deg_b")),
-          col("pb") === col("node")).drop("node")
-        .withColumn("jaccard", col("common_cnt").cast("double") /
-          (col("deg_a") + col("deg_b") - col("common_cnt")))
-        .orderBy(col("jaccard").desc, col("pa"), col("pb")).limit(20)
-        .count()
-    }
-    // Mann–Whitney at 16× rows per user (same user universe): the
-    // distinct-value cumulative walk must stay USER-bounded because the
-    // per-user decimal sums collapse first — runs the REGISTRY query
-    // against a temp dir holding the replicated events.
     // ---- REGISTRY queries at 16×: one shared temp dir of replicated
     // tables, deleted afterwards — leaked temp dirs accumulate across
     // runs (r8 ADVICE)
@@ -515,6 +498,16 @@ object ScaleCheck {
         spark.read.parquet(s"$dir/$t.parquet")
           .write.mode("overwrite").parquet(s"$regDir/$t.parquet")
 
+      // Wedge-join jaccard at 16× orders over the SAME part universe: the
+      // co-order graph DENSIFIES (degrees grow with replication), which is
+      // the wedge join's actual 100 TB failure mode — candidate pairs are
+      // Σdeg², never node-pairwise. Top-20 must stay TakeOrderedAndProject.
+      time("node_jaccard_wedge(16x orders)", 90) {
+        Queries.all("q_node_jaccard")(spark, regDir.toString).count()
+      }
+      // Mann–Whitney at 16× rows per user (same user universe): the
+      // distinct-value cumulative walk must stay USER-bounded because the
+      // per-user decimal sums collapse first.
       time("mann_whitney(16x rows/user)", 60) {
         Queries.all("q_mann_whitney")(spark, regDir.toString).count()
       }
@@ -551,7 +544,7 @@ object ScaleCheck {
     // row times the identical fixed batch against a 1× and a mult×
     // persisted index and fails if the big-index run costs >2× the
     // small one (pure wall noise headroom; the structural answer is 1×).
-    {
+    ratioRow("ivf_incremental_maintain", 2.0, "batch-cost must not scale with index") {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val trained = graft.ext.Similarity.trainCentroids(
         emb, "vec_id", "embedding", k = 8, iters = 2, trainSampleSize = 256)
@@ -562,7 +555,7 @@ object ScaleCheck {
       val baseAssign = graft.ext.Similarity.assignToCentroids(
         emb, "vec_id", "embedding", cents, "centroid_id", "centroid")
         .localCheckpoint(true)
-      def maintainSecs(indexMult: Int): Double = {
+      (indexMult: Int) => {
         val idxDir = java.nio.file.Files.createTempDirectory("graft-ivfidx")
         try {
           (0 until indexMult).map(i => baseAssign.select(
@@ -577,15 +570,6 @@ object ScaleCheck {
           (System.nanoTime() - t0) / 1e9
         } finally graft.util.Fs.deleteRecursively(idxDir)
       }
-      maintainSecs(1) // warm the write path once before timing
-      val tSmall = maintainSecs(1)
-      val tBig = maintainSecs(mult)
-      val ratio = tBig / math.max(tSmall, 0.05)
-      val ok = ratio <= 2.0
-      if (!ok) allOk = false
-      println(f"[scalecheck] ivf_incremental_maintain 1x=${tSmall}%.1f s " +
-        f"${mult}x=${tBig}%.1f s ratio=${ratio}%.2f " +
-        f"(${if (ok) "ok" else "OVER"}, batch-cost must not scale with index)")
     }
 
     // ---- r12 verdict item 4: the index-staleness readout must be
@@ -595,7 +579,7 @@ object ScaleCheck {
     // TakeOrdered sample selection (one narrow scan, no shuffle). Timed
     // against a 1x and a mult x corpus with the same frozen centroids;
     // fails if the big-corpus readout costs >2x the small one.
-    {
+    ratioRow("ivf_staleness_readout", 2.0, "readout must not scale with corpus") {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val trained = graft.ext.Similarity.trainCentroids(
         emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
@@ -603,7 +587,7 @@ object ScaleCheck {
       val cents = spark.createDataFrame(
         java.util.Arrays.asList(trained.collect(): _*), trained.schema)
       val queries = emb.filter(col("vec_id") < 8).localCheckpoint(true)
-      def stalenessSecs(corpusMult: Int): Double = {
+      (corpusMult: Int) => {
         val corpus = (0 until corpusMult).map(i =>
             emb.select((col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
               col("embedding")))
@@ -616,15 +600,6 @@ object ScaleCheck {
           k = 5, nProbe = 4, poolSize = 256).count()
         (System.nanoTime() - t0) / 1e9
       }
-      stalenessSecs(1) // warm
-      val tSmall = stalenessSecs(1)
-      val tBig = stalenessSecs(mult)
-      val ratio = tBig / math.max(tSmall, 0.05)
-      val ok = ratio <= 2.0
-      if (!ok) allOk = false
-      println(f"[scalecheck] ivf_staleness_readout 1x=${tSmall}%.1f s " +
-        f"${mult}x=${tBig}%.1f s ratio=${ratio}%.2f " +
-        f"(${if (ok) "ok" else "OVER"}, readout must not scale with corpus)")
     }
 
     // ---- r13 verdict item 3: retrain-and-swap must be ONE linear
@@ -633,10 +608,13 @@ object ScaleCheck {
     // each row once against a broadcast k-row centroid table, so the
     // verb's wall must grow at most linearly with the corpus (≤ mult×,
     // parallelism normally absorbs most of it); anything superlinear
-    // means the corpus shuffled or the training re-scanned it.
-    {
+    // means the corpus shuffled or the training re-scanned it. 1.2 slack
+    // over strict linearity (r14 ADVICE): the container's documented ±20%
+    // ambient drift would otherwise flake a verb with little parallelism
+    // headroom — same posture as the other rungs' budgets.
+    ratioRow("ivf_retrain_swap", mult * 1.2, "retrain is one linear encode pass") {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      def retrainSecs(corpusMult: Int): Double = {
+      (corpusMult: Int) => {
         val corpus = (0 until corpusMult).map(i =>
             emb.select((col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
               col("embedding")))
@@ -650,19 +628,6 @@ object ScaleCheck {
           (System.nanoTime() - t0) / 1e9
         } finally graft.util.Fs.deleteRecursively(idxDir)
       }
-      retrainSecs(1) // warm
-      val tSmall = retrainSecs(1)
-      val tBig = retrainSecs(mult)
-      val ratio = tBig / math.max(tSmall, 0.05)
-      // 1.2 slack over strict linearity (r14 ADVICE): the container's
-      // documented ±20% ambient drift would otherwise flake a verb with
-      // little parallelism headroom — same posture as the other rungs'
-      // budgets
-      val ok = ratio <= mult.toDouble * 1.2
-      if (!ok) allOk = false
-      println(f"[scalecheck] ivf_retrain_swap 1x=${tSmall}%.1f s " +
-        f"${mult}x=${tBig}%.1f s ratio=${ratio}%.2f " +
-        f"(${if (ok) "ok" else "OVER"}, retrain is one linear encode pass)")
     }
 
     // ---- r12 verdict item 7: groupedExactQuantiles at ≥10k groups —
@@ -681,7 +646,6 @@ object ScaleCheck {
     }
 
     println(s"[scalecheck] all_ok=$allOk")
-    spark.stop()
-    if (!allOk) sys.exit(1)
+    allOk
   }
 }

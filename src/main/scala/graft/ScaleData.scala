@@ -29,13 +29,10 @@ import org.apache.spark.sql.functions._
  * Shifts derive from max(key)+1 of the SOURCE (never a hard-coded stride
  * — the r9 ScaleCheck advice), so replicas can never collide.
  *
- * Usage: runMain graft.ScaleData <srcDir> <destDir> <mult>
+ * Usage: runMain graft.Tools scaledata <srcDir> <destDir> <mult>
  */
 object ScaleData {
-  def main(args: Array[String]): Unit = {
-    val Array(src, dest, multS) = args.take(3)
-    val mult = multS.toInt
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+  def run(spark: SparkSession, src: String, dest: String, mult: Int): Unit = {
     import spark.implicits._
 
     def rd(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
@@ -157,7 +154,5 @@ object ScaleData {
       d.withColumn("vec_id", shifted("vec_id", vk, i))
         .withColumn("embedding", emb)
     }, 8)
-
-    spark.stop()
   }
 }

@@ -458,6 +458,14 @@ object Similarity {
     case other => throw new IllegalArgumentException(s"unknown metric '$other'")
   }
 
+  /** The argmin key that ranks `sim` DESCENDING as Spark and DuckDB sort
+   *  it: NaN above every number (first), null last. Negation alone would
+   *  keep NaN as NaN, which the typed argmin orders greatest — last. A
+   *  +∞ sim (only an overflowing l2 gives one) ties NaN here. */
+  private def descendingKey(sim: Column): Column =
+    when(isnan(sim), lit(Double.NegativeInfinity))
+      .otherwise(coalesce(-sim, lit(Double.PositiveInfinity)))
+
   /** IVF-style coarse quantization: assign each vector to the nearest of
    *  `centroids` (a small broadcast table id → vector); search then probes
    *  only matching cells. Centroids can come from any upstream clustering;
@@ -480,7 +488,7 @@ object Similarity {
     // At 100 TB the encode pass hash-aggregates corpus×k rows and
     // shuffles corpus rows, sorting nothing.
     // null sims (zero-norm input under cosine) sorted LAST by the window
-    // (desc nulls-last); coalesce to +∞ so the aggregate agrees
+    // (desc nulls-last) and NaN sims first: `descendingKey` keeps both
     // the typed argmin carries ids as longs: others would null or truncate
     val cidType = joined.schema("centroid_id").dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(cidType),
@@ -488,8 +496,7 @@ object Similarity {
     joined.groupBy(col(idCol))
       .agg(first(col(vecCol)).as(vecCol),
         graft.functions.GraftFunctions.graftArgMinLong(
-          col("centroid_id").cast("long"),
-          coalesce(-col("sim"), lit(Double.PositiveInfinity))).as("centroid_id"))
+          col("centroid_id").cast("long"), descendingKey(col("sim"))).as("centroid_id"))
       .select(col(idCol), col(vecCol), col("centroid_id").cast(cidType).as("centroid_id"))
   }
 
@@ -653,8 +660,7 @@ object Similarity {
         // no sort anywhere (r16).
         .agg(
           graft.functions.GraftFunctions.graftArgMinLong(
-            col("code").cast("long"),
-            coalesce(-col("sim"), lit(Double.PositiveInfinity)))
+            col("code").cast("long"), descendingKey(col("sim")))
             .cast("int").as("code"),
           first(col("sv")).as("sv"))
         .select(col("subspace"), col("id"), col("sv"), col("code"))

@@ -100,9 +100,6 @@ object TextAnalysis {
     md5(array_join(words, " "))
   }
 
-  /** Rolling polynomial hash of the text (order-sensitive fingerprint). */
-  def rollingHash(text: Column): Column = xxhash64(text)
-
   /**
    * Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken 2003
    * — the MOSS algorithm): hash every word k-gram, slide a window of

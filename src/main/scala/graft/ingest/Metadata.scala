@@ -53,11 +53,4 @@ object Metadata {
         Readers.pathMetadata(key).map { case (n, c) => c.as(n) }: _*)
     base
   }
-
-  /** CVP variant (cvp...py:78-98): DataProvider/DataType are the LAST TWO
-   *  segments of the matched route prefix, not of the key. */
-  def withCvpProviderType(meta: DataFrame, routePrefix: Column): DataFrame =
-    meta
-      .withColumn("DataProvider", element_at(split(routePrefix, "/"), -2))
-      .withColumn("DataType", element_at(split(routePrefix, "/"), -1))
 }

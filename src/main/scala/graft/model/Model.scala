@@ -124,30 +124,3 @@ final case class ValidationSuite(
           c.ifPart.fieldName +: c.thenPart.flatMap(_.startsWithField).toList)
     }.distinct
 }
-
-/** Per-field verdict (result.py:6-18). */
-final case class FieldValidationResult(
-    field_path: String,
-    valid: Boolean,
-    details: String)
-
-/** Per-record verdict set (result.py:20-32). */
-final case class RecordValidationResult(
-    serial_id: Option[Long],
-    validations: Seq[FieldValidationResult])
-
-/** File-level metadata document (bucket_event_lambda_handler.py:41-89). */
-final case class FileMetadata(
-    Key: String,
-    BucketName: String,
-    SizeMiB: Double,
-    ContentType: String,
-    ETag: String,
-    Dataset: String,
-    Environment: String,
-    TrafficType: Option[String],
-    TableName: Option[String],
-    State: Option[String],
-    DataProvider: Option[String],
-    DataType: Option[String],
-    MessageCount: Option[Long])

@@ -48,11 +48,12 @@ object ValidationPipeline {
     * pins with). No job runs; janino failure (64 KB method overflow,
     * constant-pool exhaustion) means the un-fenced plan would silently
     * fall back to whole-stage INTERPRETED evaluation at execution — the
-    * r13 defect class — so the caller fences instead. */
+    * r13 defect class — so the caller fences instead. The failed compile
+    * is an answer, not a fault: its warning below is the one log line. */
   private def unfencedOverflows(candidate: DataFrame): Boolean =
     try {
-      org.apache.spark.sql.GraftBridge.compileCodegenStages(
-        candidate.queryExecution.executedPlan)
+      CodegenLogMute(org.apache.spark.sql.GraftBridge.compileCodegenStages(
+        candidate.queryExecution.executedPlan))
       false
     } catch {
       case scala.util.control.NonFatal(e) =>

@@ -26,6 +26,40 @@ class PlanSpec extends AnyFunSuite {
   private def count(hay: String, needle: String): Int =
     needle.r.findAllMatchIn(hay).length
 
+  private val codeGen = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+
+  /** `body`'s result and every event the named loggers raise while it
+    * runs, at every level (the shared session's root level is ERROR). */
+  private def logged[T](loggers: String*)(body: => T)
+      : (T, Seq[org.apache.logging.log4j.core.LogEvent]) = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { events.add(e.toImmutable); () }
+    }
+    capture.start()
+    loggers.foreach { name =>
+      val lc = new LoggerConfig(name, org.apache.logging.log4j.Level.ALL, false)
+      lc.addAppender(capture, null, null)
+      cfg.addLogger(name, lc)
+    }
+    ctx.updateLoggers()
+    try {
+      val result = body
+      import scala.jdk.CollectionConverters._
+      (result, events.asScala.toSeq)
+    } finally {
+      loggers.foreach(cfg.removeLogger)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
+
   test("q1_agg: filter pushed to the parquet scan, pruned read schema, one exchange") {
     val p = plan("q1_agg")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -544,7 +578,16 @@ class PlanSpec extends AnyFunSuite {
     assert(overflows,
       "vacuous: the giant-payload suite should overflow un-fenced codegen " +
         "(grow the payload if janino got roomier)")
-    val out = ValidationPipeline.validateRecords(records, suite)
+    // the probe's failed compile is an answer, not a fault: its own WARN
+    // is the one log line, with no CodeGenerator ERROR (and janino trace)
+    val (out, events) = logged(codeGen, "graft.pipeline.ValidationPipeline$")(
+      ValidationPipeline.validateRecords(records, suite))
+    assert(!events.exists(e => e.getLoggerName == codeGen &&
+      e.getLevel == org.apache.logging.log4j.Level.ERROR),
+      "the fence probe logged a CodeGenerator ERROR")
+    assert(events.exists(e => e.getLevel == org.apache.logging.log4j.Level.WARN &&
+      e.getMessage.getFormattedMessage.contains("fencing the projection")),
+      "the fence probe's own WARN is missing")
     val exec = out.queryExecution.executedPlan
     assert(exec.toString.contains("FencedProject"),
       "the probe must fence a sub-threshold suite whose codegen overflows")

@@ -151,6 +151,36 @@ class SimilaritySpec extends AnyFunSuite {
       Map(1L -> 7, 2L -> 3))
   }
 
+  test("assignToCentroids ranks a NaN similarity first, like the window it replaced") {
+    // centroid 2 has a NaN component, so every similarity to it is NaN;
+    // Spark and DuckDB sort NaN above every number, so the replaced
+    // row_number() over (sim desc, centroid_id) picked it. The zero
+    // vector's cosine is null against the other centroids.
+    import org.apache.spark.sql.expressions.Window
+    val vecs = Seq((1L, Array(1.0, 0.0)), (2L, Array(0.0, 1.0)), (3L, Array(0.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    val cents = Seq((1, Array(1.0, 0.0)), (2, Array(Double.NaN, 1.0)), (3, Array(0.0, 1.0)))
+      .toDF("centroid_id", "centroid")
+    for (metric <- Seq("cosine", "l2")) {
+      val sim = metric match {
+        case "cosine" => Similarity.cosine(col("embedding"), col("centroid"))
+        case "l2" => -(Similarity.dot(col("embedding"), col("embedding")) -
+          lit(2.0) * Similarity.dot(col("embedding"), col("centroid")) +
+          Similarity.dot(col("centroid"), col("centroid")))
+      }
+      val window = vecs.crossJoin(cents).withColumn("sim", sim)
+        .withColumn("rk", row_number().over(Window.partitionBy("vec_id")
+          .orderBy(col("sim").desc, col("centroid_id"))))
+        .filter(col("rk") === 1)
+        .select("vec_id", "centroid_id").as[(Long, Int)].collect().toMap
+      val got = Similarity.assignToCentroids(vecs, "vec_id", "embedding",
+          cents, "centroid_id", "centroid", metric)
+        .select("vec_id", "centroid_id").as[(Long, Int)].collect().toMap
+      assert(window(1L) == 2 && window(2L) == 2, s"$metric: vacuous, no NaN sim won")
+      assert(got == window, metric)
+    }
+  }
+
   test("semantic dedup: kept set is threshold-independent within cells; drops are justified") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val centroids = e.filter(col("vec_id") < 4)

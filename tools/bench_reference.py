@@ -4,7 +4,7 @@ generated ODE NDJSON file, for the BASELINE.md comparison.
 
 Reuses gen_fixtures' record builder + suite so the input is exactly the
 shape the goldens use; writes the same file for the Spark side
-(`graft.BenchValidation`, run with sbt) to consume.
+(`sbt "runMain graft.Tools validate-bench"`) to consume.
 
 Usage: python3 tools/bench_reference.py [n_records]
 """
