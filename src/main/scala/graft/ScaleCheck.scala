@@ -459,9 +459,9 @@ object ScaleCheck {
         // isFinalPlan=false with no skew markers
         val rows = joined.queryExecution.toRdd.count()
         val finalPlan = joined.queryExecution.executedPlan.toString
-        val engaged = finalPlan.contains("skew=true")
-        println(s"[scalecheck]   skew split engaged: $engaged")
-        if (!engaged) allOk = false
+        // the row's own line carries the verdict: FAILED via row()
+        if (!finalPlan.contains("skew=true"))
+          throw new IllegalStateException("split not engaged")
         rows
       } finally {
         spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")

@@ -141,16 +141,16 @@ object SequentialChecks {
       skips.get(path).map(c => coalesce(max(c).over(fileW), lit(false))).getOrElse(lit(false))
 
     val w = Window.partitionBy(FileCol).orderBy(SerialNumber)
-    val seg = AllSkipPaths.foldLeft(
-      records.withColumn("bundle_run",
-        sum(runStartOver(w)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    ) { case (df, (path, name)) => df.withColumn(name, fileSkip(path)) }
+    val seg = records.select(col("*") +:
+      sum(runStartOver(w)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .as("bundle_run") +:
+      AllSkipPaths.map { case (path, name) => fileSkip(path).as(name) }: _*)
 
-    val perRecord = withFails(seg)
-      // W6: zero failures in the file ⇒ one sentinel row, attached to the
-      // file's first record (row_number avoids a second pass over the input)
-      .withColumn("file_fail_count", sum(size(col("fails"))).over(fileW))
-      .withColumn("rn", row_number().over(w))
+    // W6: zero failures in the file ⇒ one sentinel row, attached to the
+    // file's first record (row_number avoids a second pass over the input)
+    val perRecord = withFails(seg).select(col("*"),
+      sum(size(col("fails"))).over(fileW).as("file_fail_count"),
+      row_number().over(w).as("rn"))
 
     perRecord
       .select(col(FileCol),
@@ -280,18 +280,20 @@ object SequentialChecks {
     // "2019-05-14 19:05:02+00:00" — session is UTC.
     def tsStr(c: Column): Column = concat(date_format(c, "yyyy-MM-dd HH:mm:ss"), lit("+00:00"))
 
-    val annotated = seg
+    // one select per dependency level: the bundle windows, then the W5
+    // emission and its running "previous emitted size", then `fails`
+    val annotated = seg.select(col("*"),
       // pair context (W2-W4, sequential.py:36-49)
-      .withColumn("prev_record_id", lag(col(RecordId), 1).over(w2))
-      .withColumn("prev_serial", lag(col(SerialNumber), 1).over(w2))
-      .withColumn("prev_gen", lag(col(GeneratedAt), 1).over(w2))
-      .withColumn("prev_rcv", lag(col(ReceivedAt), 1).over(w2))
+      lag(col(RecordId), 1).over(w2).as("prev_record_id"),
+      lag(col(SerialNumber), 1).over(w2).as("prev_serial"),
+      lag(col(GeneratedAt), 1).over(w2).as("prev_gen"),
+      lag(col(ReceivedAt), 1).over(w2).as("prev_rcv"),
       // bundle context (W5, sequential.py:61-86)
-      .withColumn("first_record_id", first(col(RecordId)).over(w2))
-      .withColumn("first_bundle_size", first(col(BundleSize)).over(w2))
-      .withColumn("last_record_id", last(col(RecordId)).over(wholeBundle))
-      .withColumn("last_serial", max(col(SerialNumber)).over(bw))
-      .withColumn("bundle_count", count(lit(1)).over(bw))
+      first(col(RecordId)).over(w2).as("first_record_id"),
+      first(col(BundleSize)).over(w2).as("first_bundle_size"),
+      last(col(RecordId)).over(wholeBundle).as("last_record_id"),
+      max(col(SerialNumber)).over(bw).as("last_serial"),
+      count(lit(1)).over(bw).as("bundle_count"))
 
     val isFull = col("first_record_id") === 0 &&
       col("last_record_id") === col("first_bundle_size") - 1
@@ -304,11 +306,9 @@ object SequentialChecks {
         isFull && col(LogFileName).isNotNull && col("bundle_count") =!= col(BundleSize))
         .otherwise(col("last_record_id") =!= col(BundleSize) - 1))
 
-    val withEmit = annotated
-      .withColumn("emit", emit)
-      .withColumn("prev_emitted_size",
-        last(when(col("emit"), col(BundleSize)), ignoreNulls = true)
-          .over(w2.rowsBetween(Window.unboundedPreceding, -1)))
+    val withEmit = annotated.select(col("*"), emit.as("emit"),
+      last(when(emit, col(BundleSize)), ignoreNulls = true)
+        .over(w2.rowsBetween(Window.unboundedPreceding, -1)).as("prev_emitted_size"))
 
     def failRow(details: Column, serial: Column): Column = struct(
       lit(null).cast("string").as("field_path"), lit(false).as("valid"),
@@ -345,7 +345,7 @@ object SequentialChecks {
                 longStr(col(BundleSize) - 1), lit("')"))),
           col("last_serial"))))
 
-    withEmit.withColumn("fails", filter(pairChecks, _.isNotNull))
+    withEmit.select(col("*"), filter(pairChecks, _.isNotNull).as("fails"))
   }
 
   private val sentinel = struct(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -27,6 +27,24 @@ import graft.pipeline.{OdeSchema, ValidationPipeline}
  * `Trigger.AvailableNow` processes the current backlog then stops —
  * byte-identical outputs to the batch path over the same files (asserted
  * in StreamingPipelineSpec).
+ *
+ * Planning happens once per query run ([[BatchPlan]]). The first
+ * micro-batch builds the `Result` — validated → sequential → fileTotals →
+ * errorHistogram — through the same `run(validateRecords(…))` call as
+ * the batch path. Every later micro-batch re-binds that analyzed plan to
+ * its own rows ([[org.apache.spark.sql.GraftBridge.rebind]]), so the rule
+ * compiler, the sequential checks and the aggregates are not constructed
+ * again: each batch pays one analyzer pass over the already-resolved plan,
+ * then optimization and physical planning. A restart starts a new query
+ * run and plans afresh on its first micro-batch, so a changed suite or
+ * schema never meets a stale plan.
+ *
+ * Micro-batches run without adaptive query execution
+ * (`spark.sql.adaptive.enabled=false`), set on the stream's own cloned
+ * session and never on the caller's. A micro-batch holds a few objects:
+ * AQE's query stages split its handful of tiny shuffles into separate
+ * jobs (a 40-record `file_totals` write took 7 jobs), each paying job
+ * set-up, with no data size for its re-planning to win back.
  */
 object StreamingPipeline {
 
@@ -50,16 +68,37 @@ object StreamingPipeline {
         sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
         sum(octet_length(col("value")).cast("long")).as("n_bytes"))
 
+    val plan = new BatchPlan(suite)
     parsed.writeStream
       .queryName("graft-validation-stream")
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        ValidationPipeline.writeAll(
-          ValidationPipeline.run(ValidationPipeline.validateRecords(batch, suite), suite),
-          outDir, mode = SaveMode.Append, extraSinks = extraSinks)
+        batch.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+        ValidationPipeline.writeAll(plan.bind(batch), outDir, mode = SaveMode.Append,
+          extraSinks = extraSinks)
       }
       .start()
+  }
+
+  /** One query run's micro-batch plan: the first [[bind]] builds the
+   *  `Result` over its batch and keeps it as the template; a later batch
+   *  over the same leaf attributes gets the template re-bound to its rows.
+   *  A batch whose leaf differs builds, and keeps, a new template through
+   *  the same call. Used from the stream's one execution thread. */
+  final class BatchPlan(suite: ValidationSuite) {
+    private var template: Option[(DataFrame, ValidationPipeline.Result)] = None
+
+    def bind(batch: DataFrame): ValidationPipeline.Result = template match {
+      case Some((first, r)) if GraftBridge.rebindable(first, batch) =>
+        def re(df: DataFrame) = GraftBridge.rebind(df, first, batch)
+        r.copy(validated = re(r.validated), sequential = re(r.sequential),
+          fileTotals = re(r.fileTotals), errorHistogram = re(r.errorHistogram))
+      case _ =>
+        val r = ValidationPipeline.run(ValidationPipeline.validateRecords(batch, suite), suite)
+        template = Some((batch, r))
+        r
+    }
   }
 
   /** Run to completion over the current backlog (AvailableNow) — the

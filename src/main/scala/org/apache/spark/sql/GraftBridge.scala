@@ -11,6 +11,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
  * so a library that defines its own native Expressions needs this one-file
  * shim inside the `org.apache.spark.sql` package to lift them into
  * user-facing Columns. Standard practice for Spark extension libraries.
+ * The few plan-level internals the engine uses live here too: analyzed
+ * plans, re-binding a stream's plan to a new micro-batch, and the
+ * codegen probe.
  */
 object GraftBridge {
   /** Wrap a Catalyst Expression as a Column. */
@@ -34,6 +37,62 @@ object GraftBridge {
   /** Wrap a LogicalPlan back into a DataFrame (classic sessions). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The RDD leaf a `foreachBatch` micro-batch (or a checkpointed
+    * Dataset) is planned over, when that leaf is its whole plan. */
+  private def rddLeaf(df: Dataset[_]): Option[execution.LogicalRDD] = analyzed(df) match {
+    case l: execution.LogicalRDD => Some(l)
+    case _ => None
+  }
+
+  /** True when `to` is an RDD leaf with exactly `from`'s output
+    * attributes, so a plan analyzed over `from` can [[rebind]] to it. */
+  def rebindable(from: Dataset[_], to: Dataset[_]): Boolean =
+    (rddLeaf(from), rddLeaf(to)) match {
+      case (Some(a), Some(b)) => a.output == b.output
+      case _ => false
+    }
+
+  /**
+   * `df`'s analyzed plan with every leaf that reads `from`'s RDD reading
+   * `to`'s RDD instead (see [[rebindable]]), as a DataFrame of `to`'s
+   * session. Each replaced leaf keeps its own output attributes, so the
+   * copies the analyzer de-duplicated (self-unions, self-joins) stay
+   * distinct and nothing above the leaves changes. The new leaf carries
+   * `to`'s statistics, partitioning, ordering and constraints, renamed
+   * positionally onto those attributes.
+   */
+  def rebind(df: DataFrame, from: Dataset[_], to: Dataset[_]): DataFrame = {
+    val src = rddLeaf(from).get
+    val dst = rddLeaf(to).get
+    ofRows(to.sparkSession, analyzed(df).transform {
+      case l: execution.LogicalRDD if l.rdd eq src.rdd =>
+        withOutput(dst, l.output, to.sparkSession.asInstanceOf[classic.SparkSession])
+    })
+  }
+
+  /** `leaf` with its attributes renamed positionally to `output`, the way
+    * `LogicalRDD.newInstance` renames them to fresh ones. */
+  private def withOutput(leaf: execution.LogicalRDD, output: Seq[catalyst.expressions.Attribute],
+                         session: classic.SparkSession): execution.LogicalRDD =
+    if (leaf.output == output) leaf
+    else {
+      import catalyst.expressions.{Attribute, AttributeMap}
+      val to = AttributeMap(leaf.output.zip(output))
+      def re[T <: Expression](e: T): T =
+        e.transform { case a: Attribute => to.getOrElse(a, a) }.asInstanceOf[T]
+      val stats = leaf.computeStats()
+      leaf.copy(output = output,
+        outputPartitioning = leaf.outputPartitioning match {
+          case p: Expression => re(p).asInstanceOf[catalyst.plans.physical.Partitioning]
+          case p => p
+        },
+        outputOrdering = leaf.outputOrdering.map(re))(
+        session,
+        Some(stats.copy(attributeStats = AttributeMap(
+          stats.attributeStats.toSeq.map { case (a, v) => to.getOrElse(a, a) -> v }))),
+        Some(leaf.constraints.map(re)))
+    }
 
   /**
    * Force-compile every codegen unit of a physical plan on the driver,
